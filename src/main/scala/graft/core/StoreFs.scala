@@ -13,9 +13,11 @@ import org.apache.spark.sql.SparkSession
   * against the session's hadoopConfiguration.
   *
   * On local[n] the base is the JVM tmpdir and every path resolves to
-  * `LocalFileSystem` — byte-identical layout to the historical
-  * java.io.File behavior (TmpHygiene's dead-pid janitor keeps scanning
-  * the same local dirs). On a cluster, setting
+  * [[LocalFs.Checksummed]], graft's `LocalFileSystem` subclass that
+  * sets permissions without forking `chmod` (see [[Sessions]]) —
+  * byte-identical layout to the historical java.io.File behavior
+  * (TmpHygiene's dead-pid janitor keeps scanning the same local dirs).
+  * On a cluster, setting
   * `spark.graft.store.root=hdfs://…/graft` (or s3a://…) moves EVERY
   * lifecycle path onto the shared filesystem with no code change — the
   * "HDFS-swap seam" the store scaladocs documented, now a type instead

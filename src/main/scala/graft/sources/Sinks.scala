@@ -275,13 +275,15 @@ object Sinks {
     }
     val fs = new Path(staged)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(new Path(staged), true)
-    var hasData = false
-    while (!hasData && it.hasNext) {
-      val name = it.next().getPath.getName
-      hasData = !name.startsWith("_") && !name.startsWith(".")
+    // a listStatus walk, not listFiles: listFiles builds each
+    // LocatedFileStatus from the entry's permissions, which the local
+    // filesystem loads by forking `ls -ld`
+    def hasData(dir: Path): Boolean = fs.listStatus(dir).exists { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory) hasData(st.getPath)
+      else !name.startsWith("_") && !name.startsWith(".")
     }
-    if (!hasData) {
+    if (!hasData(new Path(staged))) {
       fs.delete(new Path(staged), true)
       throw new IllegalArgumentException(
         s"requirement failed: $what would swap an empty table " +
