@@ -66,10 +66,9 @@ object Sessions {
       // time scaling with STATE SIZE vs with BATCH DELTA
       .config("spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled", "true")
-      // exact percentiles (oracle parity) by default; the t-digest scale
-      // path (functions.Agg) A/B-able per-run for ScaleRun evidence
-      .config(graft.functions.Agg.ApproxFlag,
-        sys.env.getOrElse("SPARK_GRAFT_APPROX_PCT", "false"))
+      // exact percentiles (oracle parity); a session flips the conf key
+      // to take the t-digest scale path (functions.Agg)
+      .config(graft.functions.Agg.ApproxFlag, "false")
       // FileOutputCommitter version — MEASURED BOTH WAYS in round 20
       // (OPTIMIZATION_r20.md): v2 (task-commit renames files straight
       // into the destination) was the candidate for the lifecycle
@@ -78,11 +77,10 @@ object Sessions {
       // d17 9.1→10.6 s) — v1's job commit renames one DIRECTORY per
       // task while v2 renames every FILE, and local renames are cheap
       // enough that v1's serial merge never dominates. Default stays
-      // v1 (also the stronger failure contract); the env knob is the
-      // deployment dial for object stores, where per-dir renames are
-      // copies and v2/cloud committers win.
+      // v1 (also the stronger failure contract). Object stores, where
+      // per-dir renames are copies, want v2/cloud committers instead.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_FOC_VERSION", "1"))
+        "1")
       // File-listing strategy (guide §6): above this many paths Spark
       // resolves a read's partition directories with a DISTRIBUTED
       // listing job (default threshold 32). The lifecycle stores here
@@ -90,13 +88,12 @@ object Sessions {
       // crossed the default and paid a 32-task listing job — 0.08-0.25 s
       // of pure task scheduling per read on the LOCAL filesystem, where
       // the driver lists the same paths in microseconds (JobProfile,
-      // round 21: 1-3 such jobs in every lifecycle gate). Local default
-      // lists up to 4096 paths on the driver; deployments on object
-      // stores / congested namenodes (where per-path listing is a slow
-      // RPC and the distributed listing genuinely wins) dial it back
-      // down with the env knob.
+      // round 21: 1-3 such jobs in every lifecycle gate). Lists up to
+      // 4096 paths on the driver; on object stores / congested
+      // namenodes, where per-path listing is a slow RPC, the
+      // distributed listing genuinely wins and this wants lowering.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_PAR_LISTING_THRESHOLD", "4096"))
+        "4096")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",

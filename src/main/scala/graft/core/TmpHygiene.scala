@@ -15,9 +15,10 @@ package graft.core
   * Deliberately LOCAL (java.io.File over the JVM tmpdir): this is the
   * local-disk janitor. When [[StoreFs]].base is repointed at a shared
   * filesystem, lifecycle dirs live there instead and this sweep simply
-  * finds nothing — shared-FS retention is owned by the stores' own
-  * {current, previous} vacuum (buildStoreVersion) and delta
-  * retirement, which ride StoreFs.
+  * finds nothing — shared-FS retention is owned by the one version
+  * allocator's {current, previous} vacuum ([[StoreFs.buildVersion]]).
+  * The `-c<n>` suffix is the per-call sink/delta naming of older builds;
+  * their dirs still need sweeping.
   */
 object TmpHygiene {
 

@@ -1065,25 +1065,6 @@ object Dedup {
       Similarity.rawPostings(d16BaseChunks(s, dir)
         .select(col("doc_id"), col("chunk_idx"), col("chunk_text"))))
 
-  /** Per-DELTA-ROOT tick counters (the storeAlloc pattern, round-16
-    * advice): the counter must be scoped to the fingerprint its roots
-    * are keyed by — a JVM-global counter interleaved across source
-    * dirs would let dir B's tick advance dir A's window and vacuum
-    * A's actual previous delta root out from under a lazy frame the
-    * prior A-tick returned (the wipe-under-reader hazard
-    * buildStoreVersion exists to prevent). Also per-call
-    * disambiguation (the replaySinkCounter rationale: concurrent
-    * ticks in one JVM must not union each other's — or a killed
-    * run's — batch=<id> fold subdirs). */
-  private val tickDeltaCounters = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
-
-  /** Delta roots whose retirement delete failed, re-attempted each tick
-    * (per-fp; see the retention comment in [[d16Tick]]). */
-  private val tickDeltaPendingDeletes =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.Set[java.lang.Long]]()
-
   /** THE per-micro-batch probe of an ingest tick — the d13 composition
     * (dedup verdict + semantic-cluster tag), factored out of d16 so the
     * versioned-store ticks (d17/d18) run the IDENTICAL verdict leg. */
@@ -1111,86 +1092,66 @@ object Dedup {
                                  dir: String): (DataFrame, DataFrame,
                                                 DataFrame) = {
     val fp = graft.core.Tables.sourceFingerprint(s"$dir/documents.parquet")
-    val c = tickDeltaCounters.computeIfAbsent(fp,
-      _ => new java.util.concurrent.atomic.AtomicLong(0)).incrementAndGet()
-    def rootFor(n: Long) = graft.core.StoreFs.base(s) +
-      s"/graft-d16-deltas-$fp-p${ProcessHandle.current.pid}-c$n"
-    val deltaRoot = rootFor(c)
-    graft.core.StoreFs.deleteQuietly(s, deltaRoot)
-    // delta-area retention, the store-version rule: keep {current,
-    // previous} (an earlier tick's returned frames read their own
-    // delta dirs lazily), retire the one root that just left the
-    // window — roots are per-fp AND the counter is per-fp, so c-2 is
-    // exactly this dir's root that aged out; without retention a
-    // long-lived session grows tmpdir by one encoded-slice copy per
-    // tick until TmpHygiene reclaims the dead pid. A failed
-    // deleteQuietly is RE-ATTEMPTED on later ticks (round-17 review:
-    // one-shot delete leaked the root for the session lifetime when a
-    // transient FS error or a still-open lazy scan blocked it) — the
-    // pending set is per-fp and bounded by the failure count, so this
-    // stays O(pending) per tick, not the old O(c) rescan
-    if (c - 2 >= 1) {
-      val pending = tickDeltaPendingDeletes
-        .computeIfAbsent(fp, _ => java.util.concurrent.ConcurrentHashMap
-          .newKeySet[java.lang.Long]())
-      pending.add(Long.box(c - 2))
-      pending.removeIf { (n: java.lang.Long) =>
-        graft.core.StoreFs.deleteQuietly(s, rootFor(n.longValue()))
-      }
-    }
+    // the delta area is a version of its own per-fp root (the one
+    // allocator's {current, previous} retention): an earlier tick's
+    // returned frames read their own delta version lazily, and a
+    // long-lived session holds at most two encoded-slice copies
     val isBatch = pmod(col("doc_id"), lit(d11Mod)) === lit(d11Res)
     val arriving = t(s, dir, "documents").filter(isBatch).select("doc_id")
-    val verdicts = graft.streaming.Streams.replayForeachBatch(s,
-      arriving.repartitionByRange(2, col("doc_id")),
-      s"docs-$fp-${d11Mod}m$d11Res", shape = "r2",
-      tag = "d16_ingest_tick")(
-      probe = verdictTagProbe(s, dir),
-      foldEach = { (mb, batchId) =>
-        // the s15 + s18 folds for THIS micro-batch's docs, landing in
-        // idempotent batch=<id> subdirs (an at-least-once retry
-        // rewrites its own dir — the s27 sink rule). The batch is a
-        // CONTIGUOUS range of the arriving slice by construction
-        // (range-split staging × one file per trigger), so the chunk
-        // restriction is a doc_id BETWEEN + residue PREDICATE that
-        // pushes down the narrow c3 chain to the parquet scan (the
-        // encodedBatch measured choice) — a broadcast-join restriction
-        // was the first cut and cannot prune the scan, re-running the
-        // full chunking pipeline per fold write.
-        val bounds = mb.agg(min("doc_id"), max("doc_id")).collect()(0)
-        if (!bounds.isNullAt(0)) {
-          // ONE chunk-chain run per micro-batch (r20 measure: the dense
-          // and sparse folds each re-ran the curation ∩ chunking chain
-          // — persist the batch-sized chunk frame for the fold's
-          // duration so both sides read it; bounded memory at any scale,
-          // unpersisted before the batch commits)
-          val chunks = TextAnalysis.queries("c3_chunk_corpus")(s, dir)
-            .filter(col("doc_id").between(bounds.getLong(0),
-                bounds.getLong(1)) &&
-              pmod(col("doc_id"), lit(d11Mod)) === lit(d11Res))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // the two fold writes are independent (different dirs, both
-          // pure functions of `chunks`) — run them concurrently (guide
-          // §2.6) so the sparse fold's tasks back-fill the executors
-          // the dense fold's write tail leaves idle (r20 measure:
-          // sequential folds were the largest cost of the tick)
-          try graft.core.Jobs.concurrently {
-            Similarity.encodeChunks(chunks).write.mode("overwrite")
-              .parquet(s"$deltaRoot/dense/batch=$batchId")
-          } {
-            Similarity.rawPostings(chunks
-                .select(col("doc_id"), col("chunk_idx"), col("chunk_text")))
-              .write.mode("overwrite")
-              .parquet(s"$deltaRoot/sparse/batch=$batchId")
-          } finally chunks.unpersist(false)
-        }
-      })
+    val (deltaDir, verdicts) = graft.core.StoreFs.buildVersion(s,
+        graft.core.StoreFs.root(s, s"d16-deltas-$fp")) { v =>
+      graft.streaming.Streams.replayForeachBatch(s,
+        arriving.repartitionByRange(2, col("doc_id")),
+        s"docs-$fp-${d11Mod}m$d11Res", shape = "r2",
+        tag = "d16_ingest_tick")(
+        probe = verdictTagProbe(s, dir),
+        foldEach = { (mb, batchId) =>
+          // the s15 + s18 folds for THIS micro-batch's docs, landing in
+          // idempotent batch=<id> subdirs (an at-least-once retry
+          // rewrites its own dir — the s27 sink rule). The batch is a
+          // CONTIGUOUS range of the arriving slice by construction
+          // (range-split staging × one file per trigger), so the chunk
+          // restriction is a doc_id BETWEEN + residue PREDICATE that
+          // pushes down the narrow c3 chain to the parquet scan (the
+          // encodedBatch measured choice) — a broadcast-join restriction
+          // was the first cut and cannot prune the scan, re-running the
+          // full chunking pipeline per fold write.
+          val bounds = mb.agg(min("doc_id"), max("doc_id")).collect()(0)
+          if (!bounds.isNullAt(0)) {
+            // ONE chunk-chain run per micro-batch (r20 measure: the dense
+            // and sparse folds each re-ran the curation ∩ chunking chain
+            // — persist the batch-sized chunk frame for the fold's
+            // duration so both sides read it; bounded memory at any scale,
+            // unpersisted before the batch commits)
+            val chunks = TextAnalysis.queries("c3_chunk_corpus")(s, dir)
+              .filter(col("doc_id").between(bounds.getLong(0),
+                  bounds.getLong(1)) &&
+                pmod(col("doc_id"), lit(d11Mod)) === lit(d11Res))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            // the two fold writes are independent (different dirs, both
+            // pure functions of `chunks`) — run them concurrently (guide
+            // §2.6) so the sparse fold's tasks back-fill the executors
+            // the dense fold's write tail leaves idle (r20 measure:
+            // sequential folds were the largest cost of the tick)
+            try graft.core.Jobs.concurrently {
+              Similarity.encodeChunks(chunks).write.mode("overwrite")
+                .parquet(s"$v/dense/batch=$batchId")
+            } {
+              Similarity.rawPostings(chunks
+                  .select(col("doc_id"), col("chunk_idx"), col("chunk_text")))
+                .write.mode("overwrite")
+                .parquet(s"$v/sparse/batch=$batchId")
+            } finally chunks.unpersist(false)
+          }
+        })
+    }
     // post-tick serving state: base artifact + the accumulated fold
     // deltas (what s21's compaction cadence later folds physically).
     // A zero-batch replay (empty arriving slice) folds nothing and
     // writes no delta dir — serve the base artifact alone.
     def deltas(base: DataFrame, sub: String): DataFrame =
-      if (graft.core.StoreFs.exists(s, s"$deltaRoot/$sub"))
-        s.read.parquet(s"$deltaRoot/$sub")
+      if (graft.core.StoreFs.exists(s, s"$deltaDir/$sub"))
+        s.read.parquet(s"$deltaDir/$sub")
           .select(base.columns.toIndexedSeq.map(col): _*)
       else base.limit(0)
     val denseDeltas = deltas(d16BaseDense(s, dir), "dense")
@@ -1287,10 +1248,10 @@ object Dedup {
   private[operators] val tickBatchSpan = 100L
 
   /** D17 MACHINERY — ONE VERSIONED TICK STORE (round-16 verdict item
-    * 1): d16 proved the tick's shape but parked its fold deltas in a
-    * hand-retained tmpdir area OUTSIDE the snapshot machinery every
+    * 1): d16 proved the tick's shape but parks its fold deltas in a
+    * delta area BESIDE the base artifact, off the store lineage every
     * other lifecycle gate uses; this builder routes the SAME tick
-    * through [[Similarity.buildStoreVersion]]/[[Similarity.writeStore]]
+    * through [[graft.core.StoreFs.buildVersion]]/[[Similarity.writeStore]]
     * so arrival folds live on the store lineage that compaction,
     * tombstone folds and re-buckets operate on — one crash/retention
     * contract (publish-on-success, {current, previous} vacuum) for the
@@ -1333,7 +1294,9 @@ object Dedup {
       .map(r => pmod(col("doc_id"), lit(d11Mod)) =!= lit(r))
       .reduce(_ && _)
     val chunksAll = TextAnalysis.queries("c3_chunk_corpus")(s, dir)
-    val (store, ticks) = Similarity.buildStoreVersion(s, dir, tag) { store =>
+    val (version, ticks) = graft.core.StoreFs.buildVersion(s,
+        Similarity.storeRoot(s, dir, tag)) { v =>
+      val store = Similarity.idxOf(v)
       // independent sides, independent dirs: snapshot them concurrently
       // (guide §2.6) — the sparse write's shuffle reads back-fill the
       // dense write's task tail
@@ -1402,7 +1365,7 @@ object Dedup {
         out
       }
     }
-    (ticks, store)
+    (ticks, Similarity.idxOf(version))
   }
 
   /** A tick store side as its readers see it: the data columns plus the
@@ -1423,7 +1386,7 @@ object Dedup {
     * (round-16 verdict item 1): the identical ingest tick (same arrival
     * slice, same verdict+tag probe, same fold encodes), with the fold
     * deltas landing as batch=<seq> partitions of a
-    * [[Similarity.buildStoreVersion]] snapshot next to the base
+    * [[graft.core.StoreFs.buildVersion]] snapshot next to the base
     * artifacts instead of a hand-retained tmpdir delta area. Per-doc
     * readbacks prune on the leading batch partition column (batch >= 0
     * — exactly the fold output, O(batch), base partitions never read).

@@ -827,7 +827,9 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
     * production ground truth runs over a SAMPLED query set, exactly
     * this shape with the s10 query window as the sample. */
   val s32PostEventRecall: Q = (s, dir) => {
-    val store = buildStoreVersion(s, dir, "s32") { store =>
+    val store = idxOf(graft.core.StoreFs.buildVersion(s,
+        storeRoot(s, dir, "s32")) { v =>
+      val store = idxOf(v)
       // stage ∥ base (the s26 overlap): the planes+1 rebuild stages
       // while the committed-geometry store writes; swap after both
       graft.sources.Sinks.stageRewriteOverlapped(s, store,
@@ -835,7 +837,7 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
         // serving state BEFORE the trigger: committed-geometry index
         writeStore(retrievalIndex(s, dir), store, Seq("bkt"))
       }
-    }._1
+    }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
     val q = s10QueryFrame(s, dir)
@@ -1167,7 +1169,9 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
     * opened. */
   val prof9StoreHealth: Q = (s, dir) => {
     import org.apache.hadoop.fs.Path
-    val (store, perBucket) = buildStoreVersion(s, dir, "prof9") { store =>
+    val (version, perBucket) = graft.core.StoreFs.buildVersion(s,
+        storeRoot(s, dir, "prof9")) { v =>
+      val store = idxOf(v)
       writeStore(baseRetrievalIndex(s, dir), store, Seq("bkt"))
       withS15BatchSlices(s, dir, parts = prof9Parts.toLong)(_.foreach(
         writeStore(_, store, Seq("bkt"), append = true)))
@@ -1192,7 +1196,7 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
     }
     import s.implicits._
     val filesDf = perBucket.toDF("bkt", "files", "kib")
-    s.read.parquet(store)
+    s.read.parquet(idxOf(version))
       .withColumn("bkt", col("bkt").cast("long"))
       .groupBy("bkt").agg(count(lit(1)).as("n_chunks"))
       .join(broadcast(filesDf), Seq("bkt"))

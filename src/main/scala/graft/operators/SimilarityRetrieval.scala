@@ -206,23 +206,6 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
       .orderBy("qid", "rk")
   }
 
-  /** Per-store-ROOT monitors for the lifecycle gates (s21/s24/s25/
-    * s26/prof9/s27): builds of the same root serialize (two concurrent
-    * identical rebuilds would only burn CPU — content is a pure
-    * function of the source dir; different gates / source dirs stay
-    * independent — the stagingLocks rationale in Streams). Reader
-    * safety does NOT ride on this lock: [[buildStoreVersion]] gives
-    * every invocation its own immutable store version with
-    * previous-version retention, so a LAZY serving frame returned
-    * before a later rebuild keeps reading its own snapshot (round-15
-    * advice closed: the old wipe-in-place protocol documented a
-    * single-concurrent-consumer contract it could not enforce). */
-  private[operators] val storeLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private[operators] def withStoreLifecycle[T](store: String)(body: => T): T =
-    storeLocks.computeIfAbsent(store, _ => new Object).synchronized(body)
-
   /** S27: STREAMING DELETE INGEST — the operational arrival path of
     * s24's tombstones: in production, deletes are CDC/curation EVENTS,
     * not a frame someone hands the compactor, so this gate replays the
@@ -240,7 +223,9 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * (the union of arrivals is the delete set), the d12-reuses-d11
     * relationship replayed on the delete dimension. */
   val s27StreamDelete: Q = (s, dir) => {
-    val store = buildStoreVersion(s, dir, "s27") { store =>
+    val store = idxOf(graft.core.StoreFs.buildVersion(s,
+        storeRoot(s, dir, "s27")) { v =>
+      val store = idxOf(v)
       writeStore(baseRetrievalIndex(s, dir), store, Seq("bkt"))
       writeStore(encodedBatch(s, dir), store, Seq("bkt"), append = true)
       val tomb = s24Tombstones(s, dir)
@@ -260,7 +245,7 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
       graft.sources.Sinks.compactPartitioned(s, store, Seq("bkt"),
         if (any) Some(arrived.select(col("doc_id"))) else None,
         if (any) Seq("doc_id") else Nil)
-    }._1
+    }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
     retrieveTopK(s15QueryFrame(s, dir), idx, planes, s10K)
@@ -321,7 +306,9 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * cost per query RETURNS to target occupancy — probes·occupancy
     * halves back, which is the entire point of the trigger. */
   val s26RebucketRebuild: Q = (s, dir) => {
-    val store = buildStoreVersion(s, dir, "s26") { store =>
+    val store = idxOf(graft.core.StoreFs.buildVersion(s,
+        storeRoot(s, dir, "s26")) { v =>
+      val store = idxOf(v)
       // the re-bucket rebuild STAGES CONCURRENTLY with the committed-
       // geometry store write (guide §2.6; production reality — the
       // offline re-encode runs while the old store serves): the staged
@@ -333,7 +320,7 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
         // committed-geometry index under the s21 bucket layout
         writeStore(retrievalIndex(s, dir), store, Seq("bkt"))
       }
-    }._1
+    }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
     retrieveTopK(s10QueryFrame(s, dir), idx, s26Planes, s10K)
@@ -569,10 +556,12 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * band dimension pruned STATICALLY at the scan — both partition
     * columns filter before a byte is read. */
   val s25BandedStore: Q = (s, dir) => {
-    val store = buildStoreVersion(s, dir, "s25") { store =>
+    val store = idxOf(graft.core.StoreFs.buildVersion(s,
+        storeRoot(s, dir, "s25")) { v =>
+      val store = idxOf(v)
       writeStore(withQband(retrievalIndex(s, dir)), store,
         Seq("bkt", "qband"))
-    }._1
+    }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
       .filter(col("qband") >= lit(s25FloorBand) &&
@@ -603,7 +592,9 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * keeps both properties because the layout carries both partition
     * columns. */
   val s29BandedRebucket: Q = (s, dir) => {
-    val store = buildStoreVersion(s, dir, "s29") { store =>
+    val store = idxOf(graft.core.StoreFs.buildVersion(s,
+        storeRoot(s, dir, "s29")) { v =>
+      val store = idxOf(v)
       // stage ∥ base (the s26 overlap, banded layout): geometry and
       // directory keyspace change together, bands carry over — one
       // staged rewrite concurrent with the committed-geometry store
@@ -615,7 +606,7 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
         writeStore(withQband(retrievalIndex(s, dir)), store,
           Seq("bkt", "qband"))
       }
-    }._1
+    }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
       .filter(col("qband") >= lit(s25FloorBand) &&
@@ -660,14 +651,16 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     val arriving = pmod(col("doc_id"), lit(Dedup.d11Mod)) ===
       lit(Dedup.d11Res)
     val tombstoned = pmod(col("doc_id"), lit(s24DelMod)) === lit(s24DelRes)
-    val store = buildStoreVersion(s, dir, "s30") { st =>
+    val store = idxOf(graft.core.StoreFs.buildVersion(s,
+        storeRoot(s, dir, "s30")) { v =>
+      val st = idxOf(v)
       // independent subtrees of one snapshot — concurrent per guide §2.6
       graft.core.Jobs.concurrently {
         writeStore(idx.filter(!arriving), s"$st/prev", Seq("bkt"))
       } {
         writeStore(idx.filter(!tombstoned), s"$st/curr", Seq("bkt"))
       }
-    }._1
+    }._1)
     val np = s.read.parquet(s"$store/prev")
       .groupBy("doc_id").agg(count(lit(1)).as("n_prev"))
     val nc = s.read.parquet(s"$store/curr")

@@ -7,93 +7,35 @@ import graft.core.Tables.t
 import graft.functions.Portable
 
 /** The versioned-store machinery every lifecycle gate rides
-  * (round-19 split, see [[SimilarityBase]]): store roots, the
-  * publish/vacuum version allocator [[buildStoreVersion]], the ONE
-  * store write discipline [[writeStore]], the s15 fold slices, index
-  * compaction s21 and tombstone deletes s24. */
+  * (round-19 split, see [[SimilarityBase]]): store root naming (the
+  * versions themselves come from the one allocator,
+  * [[graft.core.StoreFs.buildVersion]]), the ONE store write
+  * discipline [[writeStore]], the s15 fold slices, index compaction
+  * s21 and tombstone deletes s24. */
 private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
 
-  /** Root dir of a gated lifecycle store — pid-keyed (the i1 store
-    * pattern; TmpHygiene reclaims dead-pid copies), one root per `tag`
-    * (s21 compaction, s24 delete fold, prof9 store profile, …) so the
-    * lifecycle gates never collide on a path. Store VERSIONS live
-    * under the root — see [[buildStoreVersion]]. */
+  /** Root dir of a gated lifecycle store — pid-keyed
+    * ([[graft.core.StoreFs.root]]), one root per `tag` (s21
+    * compaction, s24 delete fold, prof9 store profile, …) so the
+    * lifecycle gates never collide on a path. Store VERSIONS live under
+    * the root, built by [[graft.core.StoreFs.buildVersion]]; each
+    * version holds its index under [[idxOf]]. */
   private[operators] def storeRoot(s: SparkSession, dir: String, tag: String): String =
-    graft.core.StoreFs.base(s) +
-      s"/graft-$tag-store-${graft.core.Tables.sourceFingerprint(s"$dir/documents.parquet")}" +
-      s"-p${ProcessHandle.current.pid}"
+    graft.core.StoreFs.root(s, s"$tag-store-" +
+      graft.core.Tables.sourceFingerprint(s"$dir/documents.parquet"))
 
-  /** Monotone per-root version counters (JVM-wide: store content is a
-    * pure function of the source dir, so versions are interchangeable
-    * across sessions of one JVM). `alloc` hands out build targets;
-    * `published` trails it and only advances when a build SUCCEEDS, so
-    * [[idxStore]] never resolves to a half-built or failed version. */
-  private[operators] val storeAlloc = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
-  private[operators] val storePublished = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
+  /** The index dir inside a store version. */
+  private[operators] def idxOf(version: String): String = s"$version/idx"
 
-  private[operators] def counter(m: java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.AtomicLong], root: String) =
-    m.computeIfAbsent(root,
-      _ => new java.util.concurrent.atomic.AtomicLong(0L))
-
-  /** CURRENT version path of a gated lifecycle store — the one the
+  /** CURRENT index path of a gated lifecycle store — the version the
     * gate most recently finished building in this JVM (the serving
     * reads and the store-inspecting specs resolve through this). */
   private[operators] def idxStore(s: SparkSession, dir: String,
-                                  tag: String): String = {
-    val root = storeRoot(s, dir, tag)
-    s"$root/v${counter(storePublished, root).get()}/idx"
-  }
+                                  tag: String): String =
+    idxOf(graft.core.StoreFs.currentVersion(storeRoot(s, dir, tag)))
 
   private[operators] def s21Store(s: SparkSession, dir: String): String =
     idxStore(s, dir, "s21")
-
-  /** Build a FRESH VERSION of a gated lifecycle store and return
-    * (path, build result) — SNAPSHOT ISOLATION for the lifecycle
-    * gates (round-15 advice: a wipe-in-place protocol let a later
-    * invocation delete the store a prior caller's LAZY serving frame
-    * was still scanning). Each invocation writes `$root/v<n>/idx` for
-    * a fresh monotone n, so a returned frame reads its own immutable
-    * version UNTIL VACUUM RETIRES IT; retention keeps {current,
-    * previous published} — the Delta/Iceberg vacuum-retention
-    * contract: a reader is safe while at most one newer rebuild has
-    * completed (a frame held across TWO completed rebuilds is outside
-    * the retention window and fails like any vacuumed Delta reader),
-    * and the on-disk footprint is bounded at two versions per store.
-    * Builds of the SAME root serialize on the per-store monitor
-    * (concurrent identical rebuilds would only burn CPU — content is
-    * a pure function of the source dir). */
-  private[operators] def buildStoreVersion[T](s: SparkSession, dir: String,
-                                   tag: String)
-                                  (build: String => T): (String, T) = {
-    val root = storeRoot(s, dir, tag)
-    withStoreLifecycle(root) {
-      val v = counter(storeAlloc, root).incrementAndGet()
-      val store = s"$root/v$v/idx"
-      // pre-wipe the allocated dir: pid recycling across JVM restarts
-      // can revisit a killed run's version numbers (the replay-sink
-      // rationale), and writeStore's base write is ErrorIfExists
-      graft.core.StoreFs.deleteQuietly(s, s"$root/v$v")
-      val out = build(store)
-      val prevPub = counter(storePublished, root)
-        .getAndAccumulate(v, math.max(_, _))
-      // vacuum: keep {v, previous PUBLISHED} — retention must be keyed
-      // on published versions, not allocation numbers, or a failed
-      // build in between would shift the window onto the version a
-      // live reader still holds; everything else (older published,
-      // failed partials) is retired
-      graft.core.StoreFs.listNames(s, root)
-        .filter { name =>
-          name.startsWith("v") &&
-            name.drop(1).toLongOption
-              .exists(n => n != v && n != prevPub)
-        }
-        .foreach(n => graft.core.StoreFs.deleteQuietly(s, s"$root/$n"))
-      (store, out)
-    }
-  }
 
   /** THE store write discipline (one definition for every lifecycle
     * gate): repartition on the partition columns routes each value's
@@ -211,7 +153,9 @@ private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
     * cast back to long before the serving join so both gates join in
     * one keyspace. */
   val s21IndexCompaction: Q = (s, dir) => {
-    val store = buildStoreVersion(s, dir, "s21") { store =>
+    val store = idxOf(graft.core.StoreFs.buildVersion(s,
+        storeRoot(s, dir, "s21")) { v =>
+      val store = idxOf(v)
       writeStore(baseRetrievalIndex(s, dir), store, Seq("bkt"))
       // one file per touched bucket per fold (the writeStore
       // discipline) — fragmentation is still linear in folds (base +
@@ -219,7 +163,7 @@ private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
       withS15BatchSlices(s, dir, parts = 3L)(_.foreach(
         writeStore(_, store, Seq("bkt"), append = true)))
       graft.sources.Sinks.compactPartitioned(s, store, "bkt")
-    }._1
+    }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
     retrieveTopK(s15QueryFrame(s, dir), idx, planes, s10K)
@@ -273,12 +217,14 @@ private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
     * compaction cost is the store rewrite already budgeted by the s21
     * cadence — the delete itself adds no pass. */
   val s24IndexDelete: Q = (s, dir) => {
-    val store = buildStoreVersion(s, dir, "s24") { store =>
+    val store = idxOf(graft.core.StoreFs.buildVersion(s,
+        storeRoot(s, dir, "s24")) { v =>
+      val store = idxOf(v)
       writeStore(baseRetrievalIndex(s, dir), store, Seq("bkt"))
       writeStore(encodedBatch(s, dir), store, Seq("bkt"), append = true)
       graft.sources.Sinks.compactPartitioned(s, store, Seq("bkt"),
         Some(s24Tombstones(s, dir)), Seq("doc_id"))
-    }._1
+    }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
     retrieveTopK(s15QueryFrame(s, dir), idx, planes, s10K)

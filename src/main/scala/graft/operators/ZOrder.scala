@@ -247,7 +247,9 @@ object ZOrder {
     * write rides [[Similarity.writeStore]] (codec/block-size pinned,
     * one file per cell) with the layout's own in-partition row key. */
   private def zStore(s: SparkSession, dir: String): String =
-    Similarity.buildStoreVersion(s, dir, "z1") { store =>
+    Similarity.idxOf(graft.core.StoreFs.buildVersion(s,
+        Similarity.storeRoot(s, dir, "z1")) { v =>
+      val store = Similarity.idxOf(v)
       val b = dimensioned(s, dir)
         .agg(min("user_id").as("min_u"), max("user_id").as("max_u"),
           min("day").as("min_d"), max("day").as("max_d"))
@@ -261,7 +263,7 @@ object ZOrder {
       Similarity.writeStore(zed, s"$store/data", Seq("zcell"),
         rowKeyCols = Seq("user_id", "day", "event_id"))
       b.unpersist()
-    }._1
+    }._1)
 
   /** The writer's persisted quantization bounds, read back name-based
     * (round-17 advice) with the empty-corpus guard. */
@@ -401,7 +403,7 @@ object ZOrder {
     * the out-of-bounds escape re-quantized). Stages, in cadence order:
     *
     *  1. BUILD: base layout + the writer's bounds, one versioned
-    *     snapshot ([[Similarity.buildStoreVersion]] — publish on
+    *     snapshot ([[graft.core.StoreFs.buildVersion]] — publish on
     *     success, {current, previous} retention).
     *  2. TICK: arrivals quantized under the PERSISTED bounds (read
     *     back — the reader/writer bounds contract, NOT recomputed
@@ -427,9 +429,11 @@ object ZOrder {
   private[operators] def z3TickFold(s: SparkSession, dir: String,
       tag: String, base: DataFrame, arrivals: DataFrame,
       afterStage: (String, String) => Unit = (_, _) => ()): String = {
-    val (store, _) = Similarity.buildStoreVersion(s, dir, tag) { st =>
-      writeZ3Layout(s, st, base)
-    }
+    def build(rows: DataFrame): String = Similarity.idxOf(
+      graft.core.StoreFs.buildVersion(s, Similarity.storeRoot(s, dir, tag)) {
+        v => writeZ3Layout(s, Similarity.idxOf(v), rows)
+      }._1)
+    val store = build(base)
     afterStage("build", store)
     val (minU, maxU, minD, maxD) = readBounds(s, store)
     val aRow = arrivals.agg(min("user_id").as("alo"), max("user_id").as("ahi"),
@@ -437,9 +441,7 @@ object ZOrder {
     if (aRow.isNullAt(aRow.fieldIndex("alo"))) store // empty arrival slice
     else if (aRow.getAs[Long]("alo") < minU || aRow.getAs[Long]("ahi") > maxU ||
       aRow.getAs[Long]("dlo") < minD || aRow.getAs[Long]("dhi") > maxD) {
-      val (widened, _) = Similarity.buildStoreVersion(s, dir, tag) { st =>
-        writeZ3Layout(s, st, base.unionByName(arrivals))
-      }
+      val widened = build(base.unionByName(arrivals))
       afterStage("requantize", widened)
       widened
     } else {

@@ -219,6 +219,15 @@ object PointInTime {
     * boundary so two dt_year partitions are exercised). */
   val backfillDates: Seq[String] = Seq("1998-09-30", "1998-12-31", "1999-06-30")
 
+  /** Root of an i-family backfill store, keyed by its source table's
+    * fingerprint. Each call builds a fresh version under it
+    * ([[graft.core.StoreFs.buildVersion]]), so a frame returned by one
+    * call keeps reading its own version after the next call. */
+  private def backfillRoot(s: SparkSession, dir: String, tag: String,
+                           table: String): String =
+    graft.core.StoreFs.root(s, s"$tag-store-" +
+      graft.core.Tables.sourceFingerprint(s"$dir/$table.parquet"))
+
   /** i1: the INCREMENTAL STORE inside the correctness gate — a 3-date
     * backfill through etl.Ingestor + Sinks.replaceSlices (the Delta
     * replaceWhere emulation, SURVEY §7.3's hardest parity item) into a
@@ -226,21 +235,17 @@ object PointInTime {
     * late-data reprocessing) and the final store must equal the union of
     * the per-date oracles. */
   def backfillStore(s: SparkSession, dir: String): DataFrame = {
-    // deterministic per-source path, wiped per call: repeated invocations
-    // rebuild in place instead of leaking one temp store per call
-    val root = graft.core.StoreFs.base(s) +
-      s"/graft-i1-store-${graft.core.Tables.sourceFingerprint(s"$dir/lineitem.parquet")}" +
-      s"-p${ProcessHandle.current.pid}"
-    val store = s"$root/fs"
-    graft.core.StoreFs.deleteQuietly(s, root)
-    val ing = new graft.etl.Ingestor(s, store)
-    def build(d: String): DataFrame = singlePassCore(s, dir, d)
-    // pipelined loop (r20, guide §2.6): date i+1's battery computes
-    // while date i's slice writes; write order and the per-date output
-    // contract are identical to execRange
-    ing.execRangePipelined(build, backfillDates)
-    ing.execDate(build, backfillDates.head) // idempotent re-run
-    s.read.parquet(store)
+    val (version, _) = graft.core.StoreFs.buildVersion(s,
+        backfillRoot(s, dir, "i1", "lineitem")) { v =>
+      val ing = new graft.etl.Ingestor(s, s"$v/fs")
+      def build(d: String): DataFrame = singlePassCore(s, dir, d)
+      // pipelined loop (r20, guide §2.6): date i+1's battery computes
+      // while date i's slice writes; write order and the per-date
+      // output contract are identical to execRange
+      ing.execRangePipelined(build, backfillDates)
+      ing.execDate(build, backfillDates.head) // idempotent re-run
+    }
+    s.read.parquet(s"$version/fs")
       .select("l_suppkey", "dt_ref", "dt_year", "qtd_runs", "qtd_returns",
         "avg_qty", "median_qty", "qtd_runs_1y", "avg_qty_1y",
         "qtd_runs_cur", "total_net_cur", "median_net_cur")
@@ -256,24 +261,22 @@ object PointInTime {
     * batching lever: scan amortization across slices, one partition swap
     * per batch). */
   def backfillStoreBatched(s: SparkSession, dir: String): DataFrame = {
-    val root = graft.core.StoreFs.base(s) +
-      s"/graft-i2-store-${graft.core.Tables.sourceFingerprint(s"$dir/lineitem.parquet")}" +
-      s"-p${ProcessHandle.current.pid}"
-    val store = s"$root/fs"
-    graft.core.StoreFs.deleteQuietly(s, root)
-    val ing = new graft.etl.Ingestor(s, store)
-    // Materialize the slice union ONCE: the idempotent re-run must prove
-    // the SINK path replays cleanly, not re-pay three percentile
-    // batteries — at scale the batch source would be a staged table too.
-    val slices = backfillDates.map(d => singlePassCore(s, dir, d))
-      .reduce(_ unionByName _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      def build(d: String): DataFrame = slices.filter(col("dt_ref") === d)
-      ing.execBatched(build, backfillDates) // one write job, 3 slices
-      ing.execBatched(build, backfillDates) // idempotent batched re-run
-    } finally slices.unpersist(false)
-    s.read.parquet(store)
+    val (version, _) = graft.core.StoreFs.buildVersion(s,
+        backfillRoot(s, dir, "i2", "lineitem")) { v =>
+      val ing = new graft.etl.Ingestor(s, s"$v/fs")
+      // Materialize the slice union ONCE: the idempotent re-run must
+      // prove the SINK path replays cleanly, not re-pay three percentile
+      // batteries — at scale the batch source would be a staged table.
+      val slices = backfillDates.map(d => singlePassCore(s, dir, d))
+        .reduce(_ unionByName _)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        def build(d: String): DataFrame = slices.filter(col("dt_ref") === d)
+        ing.execBatched(build, backfillDates) // one write job, 3 slices
+        ing.execBatched(build, backfillDates) // idempotent batched re-run
+      } finally slices.unpersist(false)
+    }
+    s.read.parquet(s"$version/fs")
       .select("l_suppkey", "dt_ref", "dt_year", "qtd_runs", "qtd_returns",
         "avg_qty", "median_qty", "qtd_runs_1y", "avg_qty_1y",
         "qtd_runs_cur", "total_net_cur", "median_net_cur")
@@ -289,22 +292,18 @@ object PointInTime {
     * point — a replayed micro-batch rewrites the same slices
     * idempotently. */
   def backfillStoreStreaming(s: SparkSession, dir: String): DataFrame = {
-    // pid-keyed root: the dir is deleted at entry, so a shared path
-    // would let one JVM delete another's in-flight store (the same
-    // concurrent-runs hazard the round-11 review closed for d12/e8)
-    val root = graft.core.StoreFs.base(s) +
-      s"/graft-i3-store-${graft.core.Tables.sourceFingerprint(s"$dir/lineitem.parquet")}" +
-      s"-p${ProcessHandle.current.pid}"
-    graft.core.StoreFs.deleteQuietly(s, root)
-    val (src, store, ckpt) = (s"$root/src", s"$root/fs", s"$root/ckpt")
-    backfillDates.map(d => singlePassCore(s, dir, d))
-      .reduce(_ unionByName _)
-      .coalesce(1).write.parquet(src) // one staged file → one micro-batch
-    val stream = s.readStream
-      .schema(s.read.parquet(src).schema).parquet(src)
-    graft.streaming.Streams.ingestAvailableNow(stream, store, ckpt,
-      sliceCol = "dt_ref", partCol = "dt_year")
-    s.read.parquet(store)
+    val (version, _) = graft.core.StoreFs.buildVersion(s,
+        backfillRoot(s, dir, "i3", "lineitem")) { v =>
+      val (src, ckpt) = (s"$v/src", s"$v/ckpt")
+      backfillDates.map(d => singlePassCore(s, dir, d))
+        .reduce(_ unionByName _)
+        .coalesce(1).write.parquet(src) // one staged file → one micro-batch
+      val stream = s.readStream
+        .schema(s.read.parquet(src).schema).parquet(src)
+      graft.streaming.Streams.ingestAvailableNow(stream, s"$v/fs", ckpt,
+        sliceCol = "dt_ref", partCol = "dt_year")
+    }
+    s.read.parquet(s"$version/fs")
       .select("l_suppkey", "dt_ref", "dt_year", "qtd_runs", "qtd_returns",
         "avg_qty", "median_qty", "qtd_runs_1y", "avg_qty_1y",
         "qtd_runs_cur", "total_net_cur", "median_net_cur")
@@ -322,49 +321,47 @@ object PointInTime {
     * Oracle reconstructs the merge declaratively: NOT-IN keep set UNION
     * winners UNION inserts. */
   def upsertStore(s: SparkSession, dir: String): DataFrame = {
-    // pid-keyed for the same concurrent-JVM delete hazard as i3
-    val root = graft.core.StoreFs.base(s) +
-      s"/graft-i4-store-${graft.core.Tables.sourceFingerprint(s"$dir/orders.parquet")}" +
-      s"-p${ProcessHandle.current.pid}"
-    val store = s"$root/orders"
-    graft.core.StoreFs.deleteQuietly(s, root)
-    val base = graft.core.Tables.t(s, dir, "orders")
-      .withColumn("o_year", year(col("o_orderdate")).cast("int"))
-    graft.sources.Sinks.upsert(s, base.withColumn("__seq", lit(0L)), store,
-      Seq("o_orderkey"), "__seq", "o_year")
-    // The insert branch shifts keys to guarantee freshness. A FIXED
-    // +10M shift collides once the keyspace reaches 10M (the round-19
-    // sf10 sweep hit exactly that fail-fast), so the offset is now
-    // DERIVED: the smallest power of 10 strictly above max(o_orderkey),
-    // floored at the historical 10M so every committed scale keeps its
-    // byte-identical output. Derived from the DECIMAL DIGIT COUNT, not
-    // floating log10 (round-19 ADVICE): Math.log10 is exact at powers
-    // of 10 on the JVM but DuckDB's LOG10 is libm-dependent, so at
-    // maxKey+1 = 10^k the two CEILs could disagree by 1 and shift one
-    // side's insert keys 10×. 10^len(maxKey) is integer-exact in both
-    // engines (oracle: POWER(10, LENGTH(CAST(... AS VARCHAR)))) and
-    // equals the old rule everywhere: smallest power of 10 > maxKey.
-    val maxKey =
-      base.agg(max(col("o_orderkey"))).head.getAs[Number](0).longValue
-    val offset = math.max(10000000L,
-      BigInt(10).pow(maxKey.toString.length).toLong)
-    require(offset > maxKey,
-      s"i4 insert offset $offset would collide: max(o_orderkey)=$maxKey")
-    val hit = base.filter(col("o_orderkey") % 1000 === 0)
-    val updates = hit
-      .withColumn("o_totalprice", col("o_totalprice") + 1.0)
-      .withColumn("__seq", lit(1L))
-      .unionByName(hit
-        .withColumn("o_totalprice", col("o_totalprice") * 2.0)
-        .withColumn("__seq", lit(2L)))
-      .unionByName(base.filter(col("o_orderkey") % 1500 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(offset))
-        .withColumn("__seq", lit(1L)))
-    graft.sources.Sinks.upsert(s, updates, store,
-      Seq("o_orderkey"), "__seq", "o_year")
-    graft.sources.Sinks.upsert(s, updates, store, // idempotent re-run
-      Seq("o_orderkey"), "__seq", "o_year")
-    s.read.parquet(store)
+    val (version, _) = graft.core.StoreFs.buildVersion(s,
+        backfillRoot(s, dir, "i4", "orders")) { v =>
+      val store = s"$v/orders"
+      val base = graft.core.Tables.t(s, dir, "orders")
+        .withColumn("o_year", year(col("o_orderdate")).cast("int"))
+      graft.sources.Sinks.upsert(s, base.withColumn("__seq", lit(0L)), store,
+        Seq("o_orderkey"), "__seq", "o_year")
+      // The insert branch shifts keys to guarantee freshness. A FIXED
+      // +10M shift collides once the keyspace reaches 10M (the round-19
+      // sf10 sweep hit exactly that fail-fast), so the offset is now
+      // DERIVED: the smallest power of 10 strictly above max(o_orderkey),
+      // floored at the historical 10M so every committed scale keeps its
+      // byte-identical output. Derived from the DECIMAL DIGIT COUNT, not
+      // floating log10 (round-19 ADVICE): Math.log10 is exact at powers
+      // of 10 on the JVM but DuckDB's LOG10 is libm-dependent, so at
+      // maxKey+1 = 10^k the two CEILs could disagree by 1 and shift one
+      // side's insert keys 10×. 10^len(maxKey) is integer-exact in both
+      // engines (oracle: POWER(10, LENGTH(CAST(... AS VARCHAR)))) and
+      // equals the old rule everywhere: smallest power of 10 > maxKey.
+      val maxKey =
+        base.agg(max(col("o_orderkey"))).head.getAs[Number](0).longValue
+      val offset = math.max(10000000L,
+        BigInt(10).pow(maxKey.toString.length).toLong)
+      require(offset > maxKey,
+        s"i4 insert offset $offset would collide: max(o_orderkey)=$maxKey")
+      val hit = base.filter(col("o_orderkey") % 1000 === 0)
+      val updates = hit
+        .withColumn("o_totalprice", col("o_totalprice") + 1.0)
+        .withColumn("__seq", lit(1L))
+        .unionByName(hit
+          .withColumn("o_totalprice", col("o_totalprice") * 2.0)
+          .withColumn("__seq", lit(2L)))
+        .unionByName(base.filter(col("o_orderkey") % 1500 === 0)
+          .withColumn("o_orderkey", col("o_orderkey") + lit(offset))
+          .withColumn("__seq", lit(1L)))
+      graft.sources.Sinks.upsert(s, updates, store,
+        Seq("o_orderkey"), "__seq", "o_year")
+      graft.sources.Sinks.upsert(s, updates, store, // idempotent re-run
+        Seq("o_orderkey"), "__seq", "o_year")
+    }
+    s.read.parquet(s"$version/orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), col("o_orderdate"), col("o_orderpriority"),
         col("o_year"))

@@ -17,8 +17,8 @@ import graft.sources.Sinks
   */
 object Streams {
 
-  /** Default state-partition count for stateful streaming queries
-    * (env-overridable). Rationale: a stateful operator opens, updates,
+  /** Default state-partition count for stateful streaming queries.
+    * Rationale: a stateful operator opens, updates,
     * and COMMITS one state-store instance per shuffle partition per
     * micro-batch, and the measured commit cost is super-linear in the
     * number of CONCURRENT instances (StreamAB A/B, BASELINE.md: at 32
@@ -30,8 +30,7 @@ object Streams {
     * batch — it is a deployment decision, not a leftover of the batch
     * shuffle default. Size it to state volume (~100-500 MB per
     * partition at 100 TB event scale), not to core count. */
-  def defaultStatePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "8").toInt
+  val defaultStatePartitions: Int = 8
 
   /** Run `body` against an ISOLATED CLONE of `s` whose
     * spark.sql.shuffle.partitions is pinned to the state-partition
@@ -206,11 +205,6 @@ object Streams {
       }
   }
 
-  /** Per-call sink disambiguator of [[replayForeachBatch]] (concurrent
-    * runs in one JVM must not union each other's batch=<id> subdirs). */
-  private val replaySinkCounter =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
   /** THE shared multi-batch replay harness (one copy of the round-11
     * hardenings — behind d12/d13's ingest gates and s27's streaming
     * delete): stage the SHAPED arriving frame for replay (file count ×
@@ -221,48 +215,50 @@ object Streams {
     * rewrites its own subdir instead of duplicating rows in a shared
     * one), record the probe's executed plan under PlanAudit, and
     * return the sink's union projected to the probe's own columns.
-    * The sink is per-call (counter) and pre-wiped (pid recycling
-    * across JVM restarts must not union a killed run's stale subdirs).
+    * The sink is a fresh version of one root per (tag, staging key)
+    * ([[graft.core.StoreFs.buildVersion]]): pre-wiped (pid recycling
+    * across JVM restarts must not union a killed run's stale subdirs),
+    * never shared by two calls (concurrent runs in one JVM serialize
+    * on the root), and retired once two newer calls have completed.
     * An empty arriving frame stages no data files → zero micro-batches
-    * → no sink dir: returns probe over the empty frame. */
+    * → no sink data: returns probe over the empty frame. */
   def replayForeachBatch(s: SparkSession, shaped: DataFrame,
                          stagingKey: String, shape: String, tag: String)
                         (probe: DataFrame => DataFrame,
                          foldEach: (DataFrame, Long) => Unit =
                            (_, _) => ()): DataFrame = {
     val streamDir = stageForReplay(shaped, stagingKey, shape)
-    val sinkDir = graft.core.StoreFs.base(s) +
-      s"/graft-$tag-sink-$stagingKey-p${ProcessHandle.current.pid}" +
-      s"-c${replaySinkCounter.incrementAndGet()}"
-    graft.core.StoreFs.deleteQuietly(s, sinkDir)
-    val q = s.readStream.schema(shaped.schema)
-      .option("maxFilesPerTrigger", 1).parquet(streamDir)
-      .writeStream
-      .foreachBatch { (mb: DataFrame, batchId: Long) =>
-        // index-fold side channel (d16's tick): runs INSIDE the same
-        // micro-batch as the probe, with the batch id so fold writes
-        // can land in their own idempotent batch=<id> subdirs; the
-        // empty-fallback probe below never invokes it (a zero-batch
-        // replay folds nothing)
-        graft.core.Jobs.labeled(s, s"$tag fold b$batchId") {
-          foldEach(mb, batchId)
+    val (sinkDir, _) = graft.core.StoreFs.buildVersion(s,
+        graft.core.StoreFs.root(s, s"$tag-sink-$stagingKey")) { sinkDir =>
+      val q = s.readStream.schema(shaped.schema)
+        .option("maxFilesPerTrigger", 1).parquet(streamDir)
+        .writeStream
+        .foreachBatch { (mb: DataFrame, batchId: Long) =>
+          // index-fold side channel (d16's tick): runs INSIDE the same
+          // micro-batch as the probe, with the batch id so fold writes
+          // can land in their own idempotent batch=<id> subdirs; the
+          // empty-fallback probe below never invokes it (a zero-batch
+          // replay folds nothing)
+          graft.core.Jobs.labeled(s, s"$tag fold b$batchId") {
+            foldEach(mb, batchId)
+          }
+          val out = probe(mb)
+          graft.core.Jobs.labeled(s, s"$tag probe b$batchId") {
+            out.write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
+          }
+          // audit evidence: the probe plan as EXECUTED (the sink write
+          // ran on a cloned execution, so finalize this one explicitly)
+          // — only under PlanAudit, so gated runs never pay it
+          if (graft.core.PlanEvidence.auditing) {
+            out.queryExecution.toRdd.count()
+            graft.core.PlanEvidence.record(tag, out.queryExecution
+              .explainString(org.apache.spark.sql.execution.FormattedMode))
+          }
         }
-        val out = probe(mb)
-        graft.core.Jobs.labeled(s, s"$tag probe b$batchId") {
-          out.write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-        }
-        // audit evidence: the probe plan as EXECUTED (the sink write
-        // ran on a cloned execution, so finalize this one explicitly)
-        // — only under PlanAudit, so gated runs never pay it
-        if (graft.core.PlanEvidence.auditing) {
-          out.queryExecution.toRdd.count()
-          graft.core.PlanEvidence.record(tag, out.queryExecution
-            .explainString(org.apache.spark.sql.execution.FormattedMode))
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
     // built ONCE: serves both the empty fallback and the column
     // projection; twice would pay the probe's registry side effects
     // twice on the empty path

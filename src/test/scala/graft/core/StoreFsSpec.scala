@@ -5,8 +5,9 @@ import graft.SparkSpec
 /** StoreFs — the store-lifecycle filesystem seam: Hadoop-FileSystem
   * semantics must match the java.io.File behavior the lifecycle code
   * relied on before the seam (quiet ops, absent-after-delete contract,
-  * empty listing for missing dirs), and the base must default to the
-  * JVM tmpdir so local layouts are unchanged. */
+  * empty listing for missing dirs), the base must default to the
+  * JVM tmpdir so local layouts are unchanged, and the one version
+  * allocator keeps its retention and nesting contract. */
 class StoreFsSpec extends SparkSpec {
 
   test("base defaults to the JVM tmpdir and follows the conf key") {
@@ -45,5 +46,33 @@ class StoreFsSpec extends SparkSpec {
     assert(!StoreFs.exists(spark, ghost))
     assert(StoreFs.deleteQuietly(spark, ghost))
     assert(StoreFs.listNames(spark, ghost) === Seq.empty)
+  }
+
+  test("buildVersion: a fresh version per build, {current, previous} " +
+    "kept; a nested build of another root never vacuums the outer " +
+    "build's unpublished version, and a nested build of the same root " +
+    "is refused") {
+    val base = tmpDir("graft-alloc")
+    val (outer, inner) = (s"$base/outer", s"$base/inner")
+    def mk(v: String) =
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(v))
+    def names(root: String) = StoreFs.listNames(spark, root).toSet
+    def leaf(v: String) = v.split('/').last
+    val (first, _) = StoreFs.buildVersion(spark, outer)(mk)
+    assert(StoreFs.currentVersion(outer) === first)
+    val (second, innerVs) = StoreFs.buildVersion(spark, outer) { v =>
+      mk(v)
+      val vs = (1 to 3).map(_ => StoreFs.buildVersion(spark, inner)(mk)._1)
+      intercept[IllegalArgumentException](
+        StoreFs.buildVersion(spark, outer)(mk))
+      assert(StoreFs.exists(spark, v),
+        "an inner build's vacuum retired the outer's unpublished version")
+      assert(StoreFs.currentVersion(outer) === first, "published early")
+      vs
+    }
+    assert(StoreFs.currentVersion(outer) === second)
+    assert(names(outer) === Set(first, second).map(leaf))
+    assert(names(inner) === innerVs.takeRight(2).map(leaf).toSet)
+    assert(StoreFs.deleteQuietly(spark, base))
   }
 }

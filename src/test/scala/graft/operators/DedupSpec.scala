@@ -320,6 +320,25 @@ class DedupSpec extends SparkSpec {
     results.foreach(got => assert(got === expected))
   }
 
+  test("replay sinks are bounded: sequential d12 calls share one sink " +
+    "root that keeps {current, previous} versions") {
+    (1 to 3).foreach(_ =>
+      graft.SparkEntry.queries("d12_stream_ingest_gate")(spark, dir)
+        .collect())
+    val pid = ProcessHandle.current.pid
+    val roots = new java.io.File(localPath(graft.core.StoreFs.base(spark)))
+      .listFiles().filter { f =>
+        val n = f.getName
+        n.startsWith("graft-d12_stream_ingest_gate-sink-") &&
+          (n.endsWith(s"-p$pid") || n.contains(s"-p$pid-c"))
+      }
+    assert(roots.length === 1,
+      s"one sink root per (tag, staging key): ${roots.map(_.getName).toSeq}")
+    val versions = roots.head.listFiles().map(_.getName)
+      .filter(_.matches("v\\d+"))
+    assert(versions.length === 2, s"sink versions kept: ${versions.toSeq}")
+  }
+
   test("d13 cluster tag: verdict columns equal d12's; cluster equals the " +
     "s7 assignment of the arriving doc's embedding; no verdict row lost") {
     val d13 = graft.SparkEntry.queries("d13_stream_cluster_tag")(spark, dir)
