@@ -99,7 +99,7 @@ object Events {
     * = e2's hourly agg restricted to watermark-closed windows (end <=
     * max-event-ms − 2 h; boundary pinned by StreamsSpec). */
   val e5StreamHourly: Q = (s, dir) => {
-    val src = s.read.parquet(s"$dir/events.parquet")
+    val src = t(s, dir, "events")
     // deterministic staging path per (source dir, JVM): repeated calls
     // in one process reuse one copy; the helper adds the pid key +
     // _SUCCESS completeness + lock (round-11 review hardening)
@@ -133,7 +133,7 @@ object Events {
     * emission produces. Timestamps flow in the µs domain end-to-end
     * (same truncation rationale as e3). */
   val e6StreamSessions: Q = (s, dir) => {
-    val src = s.read.parquet(s"$dir/events.parquet")
+    val src = t(s, dir, "events")
     val streamDir = graft.streaming.Streams.stageForReplay(src.coalesce(1),
       s"sess-${graft.core.Tables.sourceFingerprint(s"$dir/events.parquet")}",
       shape = "c1")
@@ -201,7 +201,7 @@ object Events {
     * corpora (≤ [[e8BatchRows]]) stay single-batch, where batch and
     * corpus coincide. */
   val e8StreamJoin: Q = (s, dir) => {
-    val src = s.read.parquet(s"$dir/events.parquet")
+    val src = t(s, dir, "events")
     val nFiles = math.min(64L, math.max(1L,
       (src.count() + e8BatchRows - 1) / e8BatchRows)).toInt
     val streamDir = graft.streaming.Streams.stageForOrderedReplay(src,
@@ -247,7 +247,7 @@ object Events {
     * group survives is explicitly undefined, so the contract — and the
     * oracle — is the distinct key set. */
   val e9StreamDedup: Q = (s, dir) => {
-    val src = s.read.parquet(s"$dir/events.parquet")
+    val src = t(s, dir, "events")
     val streamDir = graft.streaming.Streams.stageForReplay(src,
       s"events-${graft.core.Tables.sourceFingerprint(s"$dir/events.parquet")}",
       shape = "nat")
@@ -290,7 +290,7 @@ object Events {
     * with end ≤ wm, verified in StreamsSpec) are never emitted — under
     * AvailableNow the trailing ~3 hours of windows stay open. */
   val e10StreamEnrich: Q = (s, dir) => {
-    val src = s.read.parquet(s"$dir/events.parquet")
+    val src = t(s, dir, "events")
     val streamDir = graft.streaming.Streams.stageForReplay(src,
       s"events-${graft.core.Tables.sourceFingerprint(s"$dir/events.parquet")}",
       shape = "nat")

@@ -259,14 +259,17 @@ object Streams {
         .start()
       q.awaitTermination()
     }
-    // built ONCE: serves both the empty fallback and the column
-    // projection; twice would pay the probe's registry side effects
-    // twice on the empty path
+    // built ONCE: serves the empty fallback, the read-back schema and
+    // the column projection; twice would pay the probe's registry side
+    // effects twice on the empty path
     lazy val emptyProbe = probe(shaped.limit(0))
-    if (graft.core.StoreFs.exists(s, sinkDir)) s.read.parquet(sinkDir)
-      // partition discovery surfaces batch=<id> as a column — project
-      // to the probe's own columns
-      .select(emptyProbe.columns.toIndexedSeq.map(col): _*)
+    // the sink holds the probe's own rows, so its schema is the probe's:
+    // reading with it skips Spark's footer-inference job
+    if (graft.core.StoreFs.exists(s, sinkDir))
+      s.read.schema(emptyProbe.schema).parquet(sinkDir)
+        // partition discovery still surfaces batch=<id> as a column —
+        // project to the probe's own columns
+        .select(emptyProbe.columns.toIndexedSeq.map(col): _*)
     else emptyProbe
   }
 
