@@ -26,22 +26,6 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  /** Streaming state-store provider. DEFAULT = RocksDB: at 100 TB event
-    * volume the range-join state (e8) and watermark-dedup keys (e9)
-    * exceed executor heap under the HDFS-backed (in-memory) provider —
-    * RocksDB spills state to local SSD and bounds block-cache memory.
-    * `SPARK_GRAFT_STATESTORE=hdfs` opts back into the default provider
-    * (used by StreamsSpec to test both). */
-  def stateStoreProvider: String =
-    sys.env.getOrElse("SPARK_GRAFT_STATESTORE", "rocksdb") match {
-      case "hdfs" =>
-        "org.apache.spark.sql.execution.streaming.state." +
-          "HDFSBackedStateStoreProvider"
-      case _ =>
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider"
-    }
-
   def builder(master: String = s"local[$cpus]",
               shufflePartitions: String = cpus): SparkSession.Builder =
     SparkSession.builder()
@@ -53,8 +37,13 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // RocksDB state store: at 100 TB event volume the range-join state
+      // (e8) and watermark-dedup keys (e9) exceed executor heap under
+      // the HDFS-backed (in-memory) provider — RocksDB spills state to
+      // local SSD and bounds block-cache memory
       .config("spark.sql.streaming.stateStore.providerClass",
-        stateStoreProvider)
+        "org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")
       // one shared RocksDB block cache across all state partitions
       // instead of per-store unbounded LRU — the executor-memory guard
       .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",

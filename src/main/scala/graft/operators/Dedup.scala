@@ -1013,7 +1013,7 @@ object Dedup {
     // Staging key includes the batch-selection constants (a changed
     // mod/res must not replay an old split); the shared harness adds
     // the pid key, _SUCCESS completeness judgment, the in-JVM lock,
-    // the per-call idempotent sink, and PlanEvidence recording.
+    // the per-call idempotent sink, and the probe-write label.
     val fp = graft.core.Tables.sourceFingerprint(s"$dir/documents.parquet")
     graft.streaming.Streams.replayForeachBatch(s,
         arriving.repartitionByRange(2, col("doc_id")),

@@ -233,7 +233,7 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
       // staging key carries the delete-rule constants (a retuned rule
       // must not replay an old set); the shared harness (the d12/d13
       // one) adds pid + _SUCCESS staging, the per-call idempotent
-      // batch=<id> sink, and PlanEvidence recording of the arrival leg
+      // batch=<id> sink, and the probe-write label of the arrival leg
       val arrived = graft.streaming.Streams.replayForeachBatch(s,
         tomb.repartitionByRange(2, col("doc_id")),
         s"tomb-$fp-${s24DelMod}m$s24DelRes", shape = "r2",

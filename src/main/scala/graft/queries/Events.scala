@@ -230,11 +230,6 @@ object Events {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      // audit evidence: the EXECUTED micro-batch plan (state-store join,
-      // watermark bounds) — the registry frame is only the memory-sink
-      // read, so a plain explain on it audits the wrong thing
-      graft.core.PlanEvidence.record("e8_stream_join",
-        org.apache.spark.sql.graftshim.streamingExplain(q))
       iso.table(name).orderBy("user_id", "click_ts", "purch_ts")
     }
   }

@@ -451,15 +451,6 @@ object Sinks {
       graft.core.Jobs.labeled(spark, "upsert stage") {
         clustered(merged).write.partitionBy(partCol).parquet(staged)
       }
-      // audit evidence: the CDC apply plan as EXECUTED (the staged write
-      // runs on a cloned execution) — PlanAudit-gated, free otherwise
-      if (graft.core.PlanEvidence.auditing) {
-        val audit = clustered(merged)
-        audit.queryExecution.toRdd.count()
-        graft.core.PlanEvidence.record("sinks.upsert.apply",
-          audit.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-      }
       commitSwap(spark, fs, root, staged, partCol, affected.map(dirName(partCol, _)))
     } finally latestP.unpersist(false)
   }

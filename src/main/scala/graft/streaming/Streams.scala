@@ -213,8 +213,9 @@ object Streams {
     * run `probe` per micro-batch into an idempotent batch=<id>
     * OVERWRITE sink (foreachBatch is at-least-once; a retried batch
     * rewrites its own subdir instead of duplicating rows in a shared
-    * one), record the probe's executed plan under PlanAudit, and
-    * return the sink's union projected to the probe's own columns.
+    * one) labeled `<tag> probe b<id>` (the label tools.PlanAudit picks
+    * the executed probe plan by), and return the sink's union projected
+    * to the probe's own columns.
     * The sink is a fresh version of one root per (tag, staging key)
     * ([[graft.core.StoreFs.buildVersion]]): pre-wiped (pid recycling
     * across JVM restarts must not union a killed run's stale subdirs),
@@ -245,14 +246,6 @@ object Streams {
           val out = probe(mb)
           graft.core.Jobs.labeled(s, s"$tag probe b$batchId") {
             out.write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-          }
-          // audit evidence: the probe plan as EXECUTED (the sink write
-          // ran on a cloned execution, so finalize this one explicitly)
-          // — only under PlanAudit, so gated runs never pay it
-          if (graft.core.PlanEvidence.auditing) {
-            out.queryExecution.toRdd.count()
-            graft.core.PlanEvidence.record(tag, out.queryExecution
-              .explainString(org.apache.spark.sql.execution.FormattedMode))
           }
         }
         .trigger(Trigger.AvailableNow())

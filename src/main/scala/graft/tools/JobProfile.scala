@@ -1,15 +1,14 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-
 /** Dev tool: attribute a query's wall time to its Spark JOBS — the
   * measurement step (guide §1) behind picking optimization targets in
   * the multi-action lifecycle queries (tick replays, store rewrites),
   * where one registry entry runs dozens of jobs and the per-query bench
   * number cannot say WHICH action carries the cost. Runs each named
   * query `reps` times (first rep warms codegen/JIT/persisted silver
-  * stages), profiles the LAST rep with a job listener, and prints every
-  * job's duration + callsite, sorted descending.
+  * stages), records the LAST rep with [[graft.core.Telemetry]], and
+  * prints every job's duration + site (its label, else its call site),
+  * sorted descending.
   *
   * Usage: runMain graft.tools.JobProfile <name>[,name...] [sfDir] [reps]
   */
@@ -22,27 +21,6 @@ object JobProfile {
     val spark = graft.core.Sessions.get()
     graft.core.SchemaCheck.warn(spark, sfDir)
 
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()
-    @volatile var collecting = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (collecting) {
-          val p = Option(e.properties)
-          val site = p.flatMap(x =>
-              Option(x.getProperty("spark.job.description")))
-            .orElse(p.flatMap(x => Option(x.getProperty("callSite.short"))))
-            .getOrElse("?")
-          starts.put(e.jobId, (System.nanoTime(), site))
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val st = starts.remove(e.jobId)
-        if (st != null)
-          done.add((e.jobId, (System.nanoTime() - st._1) / 1e9, st._2))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       (1 until reps).foreach { i =>
@@ -50,37 +28,28 @@ object JobProfile {
         fn(spark, sfDir).queryExecution.toRdd.count()
         println(f"[jobprofile] $name warm rep $i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
       }
-      done.clear(); starts.clear()
-      collecting = true
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).queryExecution.toRdd.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      collecting = false
-      // drain trailing async listener-bus events: every started job must
-      // report its JobEnd before we total (round-20 ADVICE — a fixed
-      // sleep silently dropped the slowest jobs on a loaded host)
-      val drainDeadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (!starts.isEmpty && System.nanoTime() < drainDeadline)
-        Thread.sleep(20)
-      if (!starts.isEmpty)
-        println(s"[jobprofile] WARN: ${starts.size} job(s) never reported " +
-          "JobEnd within 5s — totals below under-report them")
-      import scala.jdk.CollectionConverters._
-      val jobs = done.asScala.toSeq
+      val (wall, rec) = graft.core.Telemetry.capture(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).queryExecution.toRdd.count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      val (jobs, open) = rec.jobs.partition(_.endMs.nonEmpty)
+      if (open.nonEmpty)
+        println(s"[jobprofile] WARN: ${open.size} job(s) never reported " +
+          "JobEnd — totals below under-report them")
       println(f"\n== $name wall ${wall}%.2fs, ${jobs.size} jobs, " +
-        f"job-sum ${jobs.map(_._2).sum}%.2fs ==")
-      jobs.sortBy(-_._2).take(40).foreach { case (id, sec, site) =>
-        println(f"  [jobprofile] job=$id%-4d ${sec}%6.3fs  $site")
+        f"job-sum ${jobs.map(_.seconds).sum}%.2fs ==")
+      jobs.sortBy(-_.seconds).take(40).foreach { j =>
+        println(f"  [jobprofile] job=${j.id}%-4d ${j.seconds}%6.3fs  ${j.site}")
       }
       // jobs can overlap or leave gaps (driver-side work); group by site
       println(s"-- by callsite --")
-      jobs.groupBy(_._3).toSeq.map { case (site, js) =>
-        (js.map(_._2).sum, js.size, site)
+      jobs.groupBy(_.site).toSeq.map { case (site, js) =>
+        (js.map(_.seconds).sum, js.size, site)
       }.sortBy(-_._1).foreach { case (sum, n, site) =>
         println(f"  [jobprofile] ${sum}%6.3fs n=$n%-3d $site")
       }
     }
-    spark.sparkContext.removeSparkListener(listener)
     spark.stop()
   }
 }

@@ -1,10 +1,18 @@
 package graft.tools
 
+import org.apache.spark.sql.execution.FormattedMode
+
 /** Physical-plan audit dump: `explain("formatted")` for a curated set of
-  * headline queries, written to stdout for committing as PLANS_r{N}.md —
-  * the direct evidence behind BASELINE.md's scale-posture claims
-  * (pushdown reaching the scan, broadcast on the small side, whole-stage
-  * codegen spans, no stray Exchanges).
+  * headline queries, written to stdout — the direct evidence behind
+  * BASELINE.md's scale-posture claims (pushdown reaching the scan,
+  * broadcast on the small side, whole-stage codegen spans, no stray
+  * Exchanges). Earlier dumps (`PLANS_r9.md`…`PLANS_r19.md`) live in git
+  * history; `plans/r21/` holds the per-change evidence format.
+  *
+  * A frame that only reads a sink (a replayed stream's verdicts, an
+  * upserted table, a memory sink) hides the plan that wrote it, so the
+  * dump adds the write's own executed plan, picked from the SQL
+  * executions [[graft.core.Telemetry]] recorded during the run.
   *
   * Usage: runMain graft.tools.PlanAudit [sfDir] [query ...]
   */
@@ -77,37 +85,43 @@ object PlanAudit {
     "x6_compressed_media", // ImageIO JPEG/PNG decode in the injectable mapPartitions shape
   )
 
+  /** Descriptions of the executions a sink-reading frame hides, most
+    * specific first: a replayed stream's per-batch probe write
+    * (`Streams.replayForeachBatch`), an upsert's staged apply
+    * (`Sinks.upsert`), and a stream's micro-batch, which Spark labels
+    * `batch = <n>`. The last execution of the first kind found wins. */
+  private val hidden = Seq(""".* probe b\d+""".r, "upsert stage".r,
+    """(?s).*\nbatch = \d+""".r)
+
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq else defaults
-    // opt into producer-side executed-plan evidence (see PlanEvidence)
-    sys.props(graft.core.PlanEvidence.AuditProp) = "true"
     val spark = graft.core.Sessions.get()
     graft.core.SchemaCheck.warn(spark, dir)
     names.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, dir)
       // EXECUTE first: AQE only re-optimizes as stages complete, so an
       // un-executed explain shows the initial adaptive plan
       // (isFinalPlan=false) — broadcast decisions and Exchange counts
       // can differ from what actually ran (round-9 ADVICE: 12 of 13
       // committed PLANS_r9 sections were initial plans).
-      df.queryExecution.toRdd.count()
+      val (df, rec) = graft.core.Telemetry.capture(spark) {
+        val df = graft.SparkEntry.queries(name)(spark, dir)
+        df.queryExecution.toRdd.count()
+        df
+      }
       println(s"\n## $name\n")
       println("```")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      println(df.queryExecution.explainString(FormattedMode))
       println("```")
-      // streaming/foreachBatch/sink operators: the frame above is only
-      // the sink read — print the EXECUTED micro-batch/probe/apply plan
-      // the producer recorded during the run just forced
-      val evidenceKey = Map("i4_upsert" -> "sinks.upsert.apply")
-        .getOrElse(name, name)
-      graft.core.PlanEvidence.get(evidenceKey).foreach { p =>
-        println(s"\n### $name — executed streaming/probe plan\n")
-        println("```")
-        println(p)
-        println("```")
-      }
+      hidden.iterator
+        .flatMap(p => rec.sql.filter(x => p.matches(x.description)).lastOption)
+        .nextOption().foreach { x =>
+          val label = x.description.trim.replace('\n', ' ')
+          println(s"\n### $name — executed write plan ($label)\n")
+          println("```")
+          println(x.qe.explainString(FormattedMode))
+          println("```")
+        }
     }
     spark.stop()
   }

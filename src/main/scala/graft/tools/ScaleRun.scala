@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.streaming.StreamingQueryListener
-
 /** Scale-headroom harness: runs the FULL query registry against a
   * GenScale-generated ~sf1 dir, reporting per-query wall time, shuffle
-  * read/write bytes, and peak streaming-state rows — the measured
-  * evidence behind BASELINE.md's "scale posture" claims. An optional
-  * third arg restricts to queries whose name starts with the prefix
-  * (e.g. `d` for the dedup battery).
+  * read/write bytes, and peak streaming-state rows, as recorded by
+  * [[graft.core.Telemetry]] — the measured evidence behind
+  * BASELINE.md's "scale posture" claims. An optional third arg
+  * restricts to queries whose name starts with the prefix (e.g. `d`
+  * for the dedup battery).
   * Usage: runMain graft.tools.ScaleRun [sfDir] [passes] [prefix]
   */
 object ScaleRun {
@@ -18,30 +16,6 @@ object ScaleRun {
     val passes = if (args.length > 1) args(1).toInt else 2
     val spark = graft.core.Sessions.get()
     graft.core.SchemaCheck.warn(spark, dir)
-
-    @volatile var shufRead = 0L
-    @volatile var shufWrite = 0L
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          shufRead += m.shuffleReadMetrics.totalBytesRead
-          shufWrite += m.shuffleWriteMetrics.bytesWritten
-        }
-      }
-    })
-    @volatile var peakStateRows = 0L
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val rows = e.progress.stateOperators.map(_.numRowsTotal).sum
-        if (rows > peakStateRows) peakStateRows = rows
-      }
-      override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    })
 
     val all = graft.SparkEntry.queries.keys.toSeq.sorted
     // third arg: a name prefix, or a comma-separated exact-name list
@@ -89,15 +63,16 @@ object ScaleRun {
           else (name, graft.SparkEntry.queries(name)) +:
             twins.getOrElse(name, Nil)
         runs.foreach { case (label, q) =>
-          val (r0, w0, s0) = (shufRead, shufWrite, peakStateRows)
-          val t0 = System.nanoTime()
-          val n = q(spark, dir).queryExecution.toRdd.count()
-          val sec = (System.nanoTime() - t0) / 1e9
+          val ((n, sec), rec) = graft.core.Telemetry.capture(spark) {
+            val t0 = System.nanoTime()
+            val n = q(spark, dir).queryExecution.toRdd.count()
+            (n, (System.nanoTime() - t0) / 1e9)
+          }
           println(f"[scale] pass=$pass q=$label%-20s ${sec}%7.2fs " +
             f"rows=$n%-8d " +
-            f"shufR=${(shufRead - r0) / 1e6}%9.1fMB " +
-            f"shufW=${(shufWrite - w0) / 1e6}%9.1fMB " +
-            f"stateRows=${math.max(peakStateRows - s0, 0)}")
+            f"shufR=${rec.shuffleReadBytes / 1e6}%9.1fMB " +
+            f"shufW=${rec.shuffleWriteBytes / 1e6}%9.1fMB " +
+            f"stateRows=${rec.peakStateRows}")
         }
       }
     }

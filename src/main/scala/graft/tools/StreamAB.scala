@@ -1,64 +1,34 @@
 package graft.tools
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.streaming.StreamingQueryListener
-
 /** A/B harness for the streaming trio (e6/e8/e9): runs each query
-  * `passes` times under the CURRENT session config (flip the state
-  * store with SPARK_GRAFT_STATESTORE=hdfs|rocksdb between invocations)
-  * and prints, per pass, the wall time next to the streaming engine's
-  * own accounting — micro-batch count, summed batch duration, and the
-  * state-store commit/update components from StateOperatorProgress.
+  * `passes` times on the given state-store provider (run once per
+  * provider and compare) and prints, per pass, the wall time next to
+  * the streaming engine's own accounting from [[graft.core.Telemetry]]
+  * — micro-batch count, summed addBatch duration, and the state-store
+  * commit/update components from StateOperatorProgress.
   * Separates "the host was contended" (wall ≫ batch durations, commit
   * share flat) from "state-store commits got slower" (commit share
   * grows) without guessing.
-  * Usage: runMain graft.tools.StreamAB [sfDir] [passes]
+  * Usage: runMain graft.tools.StreamAB [sfDir] [passes] [rocksdb|hdfs]
   */
 object StreamAB {
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 3
+    val provider = if (args.length > 2) args(2) else "rocksdb"
+    val providerClass = "org.apache.spark.sql.execution.streaming.state." +
+      (provider match {
+        case "rocksdb" => "RocksDBStateStoreProvider"
+        case "hdfs" => "HDFSBackedStateStoreProvider"
+        case other => sys.error(s"unknown provider $other (rocksdb|hdfs)")
+      })
     val spark = graft.core.Sessions.get()
+    // before any stream starts; the isolated stream sessions
+    // (Streams.withStatePartitions) clone this session's live conf
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      providerClass)
 
-    case class Batch(durMs: Long, commitMs: Long, updateMs: Long,
-                     removeMs: Long, stateRows: Long)
-    val batches = ArrayBuffer.empty[Batch]
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val ops = p.stateOperators
-        batches.synchronized {
-          batches += Batch(
-            Option(p.durationMs.get("addBatch")).map(_.longValue).getOrElse(0L),
-            ops.map(_.commitTimeMs).sum,
-            ops.map(_.allUpdatesTimeMs).sum,
-            ops.map(_.allRemovalsTimeMs).sum,
-            ops.map(_.numRowsTotal).sum)
-        }
-        if (sys.env.contains("STREAMAB_DETAIL")) {
-          println(s"[streamab-detail] batch=${p.batchId} " +
-            s"durationMs=${p.durationMs}")
-          ops.zipWithIndex.foreach { case (o, i) =>
-            val cm = o.customMetrics
-            import scala.jdk.CollectionConverters._
-            val interesting = cm.asScala.toSeq.sortBy(-_._2)
-              .filter(_._2 > 0).take(12)
-            println(s"[streamab-detail]   op$i commit=${o.commitTimeMs} " +
-              s"update=${o.allUpdatesTimeMs} top=$interesting")
-          }
-        }
-      }
-      override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    })
-
-    val provider = graft.core.Sessions.stateStoreProvider
-      .split("\\.").last.replace("StateStoreProvider", "")
     println(s"[streamab] provider=$provider sf=$dir " +
       s"shufflePartitions=${spark.conf.get("spark.sql.shuffle.partitions")}")
     val names = Seq("e6_stream_sessions", "e8_stream_join", "e9_stream_dedup")
@@ -67,18 +37,19 @@ object StreamAB {
       graft.SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count())
     (1 to passes).foreach { pass =>
       names.foreach { name =>
-        batches.synchronized(batches.clear())
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, dir)
-          .queryExecution.toRdd.count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val bs = batches.synchronized(batches.toVector)
+        val (wall, rec) = graft.core.Telemetry.capture(spark) {
+          val t0 = System.nanoTime()
+          graft.SparkEntry.queries(name)(spark, dir)
+            .queryExecution.toRdd.count()
+          (System.nanoTime() - t0) / 1e9
+        }
+        val bs = rec.batches
         println(f"[streamab] pass=$pass q=$name%-18s wall=${wall}%6.2fs " +
-          f"batches=${bs.size}%2d addBatch=${bs.map(_.durMs).sum / 1e3}%6.2fs " +
-          f"stateCommit=${bs.map(_.commitMs).sum / 1e3}%6.2fs " +
-          f"stateUpdate=${bs.map(_.updateMs).sum / 1e3}%5.2fs " +
-          f"stateRemove=${bs.map(_.removeMs).sum / 1e3}%5.2fs " +
-          f"stateRows=${bs.map(_.stateRows).max}")
+          f"batches=${bs.size}%2d addBatch=${bs.map(_.addBatchMs).sum / 1e3}%6.2fs " +
+          f"stateCommit=${bs.map(_.stateCommitMs).sum / 1e3}%6.2fs " +
+          f"stateUpdate=${bs.map(_.stateUpdateMs).sum / 1e3}%5.2fs " +
+          f"stateRemove=${bs.map(_.stateRemoveMs).sum / 1e3}%5.2fs " +
+          f"stateRows=${rec.peakStateRows}")
       }
     }
     spark.stop()

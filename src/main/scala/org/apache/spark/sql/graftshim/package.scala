@@ -37,14 +37,14 @@ package object graftshim {
     case other => other.newSession()
   }
 
-  /** EXECUTED micro-batch plan of a streaming query — the PlanAudit
-    * evidence for streaming operators whose registry frame is only the
-    * sink read (e8's memory table): `explainInternal` is `private[sql]`
-    * on the wrapper, reachable from this bridge package. */
-  def streamingExplain(q: org.apache.spark.sql.streaming.StreamingQuery): String =
-    q match {
-      case w: execution.streaming.runtime.StreamingQueryWrapper =>
-        w.explainInternal(true)
-      case other => String.valueOf(other)
-    }
+  /** Blocks until the listener bus has delivered every event posted so
+    * far (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** The QueryExecution a SQL-execution-end event carries (a
+    * `private[sql]` field). It is set for executions of every session,
+    * the isolated stream sessions included. */
+  def queryExecution(e: execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[execution.QueryExecution] = Option(e.qe)
 }

@@ -131,8 +131,6 @@ class StreamsSpec extends SparkSpec {
 
   test("state store is RocksDB by default; state rows bounded by active keys") {
     import scala.jdk.CollectionConverters._
-    assume(sys.env.get("SPARK_GRAFT_STATESTORE").isEmpty,
-      "provider overridden via env; skipping default-provider assertions")
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
       .contains("RocksDBStateStoreProvider"))
     implicit val sql = spark.sqlContext
