@@ -83,6 +83,36 @@ object Sessions {
       // distributed listing genuinely wins and this wants lowering.
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         "4096")
+      // Generated-class cache — MEASURED: Spark keeps the classes Janino
+      // compiles for whole-stage codegen, projections, orderings and
+      // columnar accessors in a JVM-wide LRU of 100 entries by default.
+      // All 168 registry queries, run twice each in one JVM with an
+      // unbounded cache at sf0.001, compile 2563 distinct classes at
+      // local[4] and 2602 at local[32]; written once and then run once,
+      // with the stage-free class names below, 2008. perfbench's 9 adhoc
+      // ops alone need ~160. At 100 the cache evicted in a cycle and
+      // every timed pass recompiled: 45-86 classes per adhoc_sf0.1 pass
+      // and 75-87 per lifecycle_sf0.1 pass (local[4]). 4096 holds the
+      // working set with headroom for Guava's per-segment LRU (4
+      // segments of 1024); a cached class costs only its metaspace,
+      // which the warmup has already paid.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // ...and a class's code must not depend on the order of planning.
+      // AQE numbers whole-stage codegen stages as it re-plans, in the
+      // order its query stages complete, and Spark puts that number in
+      // the generated class's name. So a query with concurrent stages
+      // (s31, s32: 6-14 classes per warm call; d12 now and then) got
+      // new names on a warm call and missed the cache with the same
+      // code. The number stays in a comment of the generated source.
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      // One class loader for the tasks of every session. The cache above
+      // is keyed by (context class loader, code). With artifact isolation
+      // on, each session gets its own executor class loader, and every
+      // stream start clones its session (Streams.withStatePartitions), so
+      // each replayed stream's micro-batch tasks compiled their classes
+      // again. The engine adds no per-session jars, files or classes,
+      // so there is nothing for isolation to keep apart.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",

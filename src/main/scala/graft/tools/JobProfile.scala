@@ -8,7 +8,8 @@ package graft.tools
   * query `reps` times (first rep warms codegen/JIT/persisted silver
   * stages), records the LAST rep with [[graft.core.Telemetry]], and
   * prints every job's duration + site (its label, else its call site),
-  * sorted descending.
+  * sorted descending, and the generated classes the call compiled (a
+  * warm call that compiles any missed Spark's codegen class cache).
   *
   * Usage: runMain graft.tools.JobProfile <name>[,name...] [sfDir] [reps]
   */
@@ -38,7 +39,7 @@ object JobProfile {
         println(s"[jobprofile] WARN: ${open.size} job(s) never reported " +
           "JobEnd — totals below under-report them")
       println(f"\n== $name wall ${wall}%.2fs, ${jobs.size} jobs, " +
-        f"job-sum ${jobs.map(_.seconds).sum}%.2fs ==")
+        f"job-sum ${jobs.map(_.seconds).sum}%.2fs, compiles=${rec.compiles} ==")
       jobs.sortBy(-_.seconds).take(40).foreach { j =>
         println(f"  [jobprofile] job=${j.id}%-4d ${j.seconds}%6.3fs  ${j.site}")
       }

@@ -85,13 +85,22 @@ object PlanAudit {
     "x6_compressed_media", // ImageIO JPEG/PNG decode in the injectable mapPartitions shape
   )
 
-  /** Descriptions of the executions a sink-reading frame hides, most
-    * specific first: a replayed stream's per-batch probe write
+  /** The executions a sink-reading frame hides, most specific first: a
+    * replayed stream's per-batch probe write
     * (`Streams.replayForeachBatch`), an upsert's staged apply
-    * (`Sinks.upsert`), and a stream's micro-batch, which Spark labels
-    * `batch = <n>`. The last execution of the first kind found wins. */
-  private val hidden = Seq(""".* probe b\d+""".r, "upsert stage".r,
-    """(?s).*\nbatch = \d+""".r)
+    * (`Sinks.upsert`), and a stream's micro-batch that read input, which
+    * Spark labels `runId = <r>\nbatch = <n>` (a stream's last batch is
+    * often a no-data batch that only evicts state, over empty
+    * `LocalTableScan`s). The last execution of the first kind found
+    * wins. */
+  private def hidden(rec: graft.core.Telemetry.Record)
+      : Seq[graft.core.Telemetry.Sql => Boolean] = {
+    val withInput = rec.batches.filter(_.inputRows > 0)
+      .map(b => s"\nrunId = ${b.runId}\nbatch = ${b.batchId}").toSet
+    Seq(x => x.description.matches(""".* probe b\d+"""),
+      _.description == "upsert stage",
+      x => withInput.exists(x.description.endsWith))
+  }
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
@@ -113,8 +122,8 @@ object PlanAudit {
       println("```")
       println(df.queryExecution.explainString(FormattedMode))
       println("```")
-      hidden.iterator
-        .flatMap(p => rec.sql.filter(x => p.matches(x.description)).lastOption)
+      hidden(rec).iterator
+        .flatMap(p => rec.sql.filter(p).lastOption)
         .nextOption().foreach { x =>
           val label = x.description.trim.replace('\n', ' ')
           println(s"\n### $name — executed write plan ($label)\n")

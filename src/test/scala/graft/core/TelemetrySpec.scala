@@ -65,6 +65,15 @@ class TelemetrySpec extends SparkSpec {
     assert(!sites.contains("?"), sites)
   }
 
+  test("a job AQE submits from its own pool is named by an engine site") {
+    // the read-back of d12's sink runs its AQE shuffle stages on the
+    // materialization pool, whose thread's call site is a JDK frame
+    val (_, rec) = Telemetry.capture(spark)(run("d12_stream_ingest_gate"))
+    val sites = rec.jobs.map(_.site)
+    assert(sites.nonEmpty)
+    assert(!sites.exists(_.contains("CompletableFuture.java")), sites)
+  }
+
   test("every job of the body has an end; the recorder leaves the bus") {
     assert(recorders === 0)
     val (during, rec) = Telemetry.capture(spark) {
