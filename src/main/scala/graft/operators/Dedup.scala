@@ -1417,37 +1417,39 @@ object Dedup {
   /** The d18 maintenance pass over a freshly ticked store — split out
     * so the spec can pin store state after each leg via `afterLeg`.
     * Legs, in cadence order: (1) DELTA + TOMBSTONE FOLD — all rows of
-    * both sides, minus the [[Similarity.s24Tombstones]] delete set
-    * (broadcast anti-join, map-side against the store scan inside the
-    * staged rewrite), rewritten back into the single batch=-1 base
-    * layout through [[graft.sources.Sinks.rewritePartitioned]]'s atomic
-    * rename-aside swap (the batch-level directory set itself changes —
-    * delta dirs disappear — which is exactly the layout change that
-    * earns the swap over an in-place mutation); (2) REBUCKET-DUE
-    * readout — prof8's integer trigger rule over the folded index's
-    * n_total, the check that closes the daily loop. Returns the 1-row
-    * health frame. */
+    * both sides of the tick store `store`, minus the
+    * [[Similarity.s24Tombstones]] delete set (broadcast anti-join,
+    * map-side against the store scan inside the rewrite), written in
+    * the single batch=-1 base layout through
+    * [[graft.sources.Sinks.writePartitioned]] into ONE fresh version
+    * of the fold root `storeRoot(dir, s"$tag-fold")` — the published
+    * tick version is only read, and the fold version publishes once
+    * both sides are written, so a failure anywhere in the fold
+    * publishes nothing and leaves both tick sides as they were;
+    * (2) REBUCKET-DUE readout — prof8's integer trigger rule over the
+    * folded index's n_total, the check that closes the daily loop.
+    * Returns the 1-row health frame and the folded store. */
   private[operators] def d18Maintain(s: SparkSession, dir: String,
-      store: String, afterLeg: String => Unit = _ => ()): DataFrame = {
+      tag: String, store: String, afterLeg: String => Unit = _ => ())
+      : (DataFrame, String) = {
     val tomb = Similarity.s24Tombstones(s, dir)
-    // SEQUENTIAL by contract, not an oversight (r20 optimization pass):
-    // a concurrent dense ∥ sparse fold was tried and reverted — the
-    // spec-pinned crash contract says a crash before the DENSE swap's
-    // first rename leaves BOTH sides serving pre-fold content (DedupSpec
-    // "crash mid-swap"), which only holds when the dense swap strictly
-    // precedes the sparse one; the concurrent variant also let one
-    // side's staged-write listing race the other's rename window.
-    Seq("dense", "sparse").foreach { sub =>
-      val partCols = if (sub == "dense") tickDensePart else tickSparsePart
-      val all = s.read.parquet(s"$store/$sub")
-      val kept = graft.sources.Sinks
-        .antiJoinTombstones(all, tomb, Seq("doc_id"))
-        .drop("batch").withColumn("batch", lit(-1L))
-      graft.sources.Sinks.rewritePartitioned(s, s"$store/$sub",
-        kept, partCols)
-    }
+    val folded = Similarity.idxOf(graft.core.StoreFs.buildVersion(s,
+        Similarity.storeRoot(s, dir, s"$tag-fold")) { v =>
+      // one side after the other: afterLeg observes the build between
+      // the dense and the sparse write
+      Seq("dense", "sparse").foreach { sub =>
+        val partCols = if (sub == "dense") tickDensePart else tickSparsePart
+        val kept = graft.sources.Sinks
+          .antiJoinTombstones(s.read.parquet(s"$store/$sub"), tomb,
+            Seq("doc_id"))
+          .drop("batch").withColumn("batch", lit(-1L))
+        graft.sources.Sinks.writePartitioned(s, kept,
+          s"${Similarity.idxOf(v)}/$sub", partCols, "fold")
+        afterLeg(sub)
+      }
+    }._1)
     afterLeg("fold")
-    val health = tickSide(s, store, "dense")
+    val health = tickSide(s, folded, "dense")
       .agg(count(lit(1)).as("n_total"))
       .withColumn("planes_committed", lit(Similarity.planes))
       .withColumn("planes_recommended",
@@ -1455,16 +1457,16 @@ object Dedup {
       .withColumn("rebucket_due",
         (col("planes_recommended") > lit(Similarity.planes)).cast("int"))
     afterLeg("health")
-    health
+    (health, folded)
   }
 
   /** D18: TICK-THEN-MAINTAIN (round-16 verdict item 2) — the daily
     * operations loop as ONE gated entry: run [[d17TickStore]]'s tick
     * (same slice, same probe, same folds, own store lineage), then the
-    * maintenance cadence on the SAME store version ([[d18Maintain]]:
-    * delta+tombstone fold through the atomic swap, then the rebucket-due
-    * readout), then SERVE the s15 query window from the maintained
-    * store with the health readout riding every row (the one-frame-
+    * maintenance cadence over that store version ([[d18Maintain]]:
+    * delta+tombstone fold into a fresh fold version, then the
+    * rebucket-due readout), then SERVE the s15 query window from the
+    * folded store with the health readout riding every row (the one-frame-
     * gates-the-whole-loop rule from d16). Oracle: the composition of
     * the stages' own duals — [[Similarity.s24Sql]] (serving over
     * rebuild-minus-deleted: base ∪ arrivals = corpus, so the ticked,
@@ -1477,9 +1479,9 @@ object Dedup {
   val d18TickMaintain: Q = (s, dir) => {
     val (_, store) = tickStore(s, dir, "d18_tick_maintain", Seq(d11Res),
       probe = verdictTagProbe(s, dir))
-    val health = d18Maintain(s, dir, store)
+    val (health, folded) = d18Maintain(s, dir, "d18_tick_maintain", store)
     val served = Similarity.retrieveTopK(Similarity.s15QueryFrame(s, dir),
-      tickSide(s, store, "dense").drop("batch"),
+      tickSide(s, folded, "dense").drop("batch"),
       Similarity.planes, Similarity.s10K)
     served.crossJoin(broadcast(health))
       .orderBy("qid", "rk")

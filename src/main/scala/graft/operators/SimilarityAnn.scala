@@ -808,12 +808,12 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
 
   /** S32: POST-EVENT RECALL EVAL — s31's accept/rollback measurement
     * composed with the lifecycle event it exists to adjudicate
-    * (round-17 verdict item 3): replay the s26 re-bucket (committed-
-    * geometry store → staged planes+1 rebuild → rename-aside swap),
-    * then emit the recall frame ENTIRELY off the post-event artifacts.
-    * The served leg is [[retrieveTopK]] over the SWAPPED store under
+    * (round-17 verdict item 3): replay the s26 re-bucket (the planes+1
+    * rebuild written into a fresh store version), then emit the recall
+    * frame ENTIRELY off the post-event artifacts.
+    * The served leg is [[retrieveTopK]] over the REBUILT store under
     * the new geometry (s26's serving, verbatim); the ground truth is
-    * the brute-force [[exactTwin]] over the SAME swapped store — both
+    * the brute-force [[exactTwin]] over the SAME rebuilt store — both
     * legs read one store lineage, so this is the number a deployment
     * accepts or rolls back the re-bucket on, measured where it will
     * serve, not on a parallel in-memory copy. Closes the loop the s31
@@ -821,22 +821,16 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
     * Oracle: s26's serving SQL and the exact (bucketless) variant of
     * the SAME parameterized generator, fused by s31's recall tail —
     * fully relational, the store invisible to results (d17 pattern).
-    * Scale shape: the event replay is s26's (one map-only re-encode +
-    * one swap, paid per trigger firing); the eval legs are batch×k
+    * Scale shape: the event replay is s26's (one map-only re-encode
+    * write, paid per trigger firing); the eval legs are batch×k
     * frames; the exact leg is O(queries × index) BY DESIGN — in
     * production ground truth runs over a SAMPLED query set, exactly
     * this shape with the s10 query window as the sample. */
   val s32PostEventRecall: Q = (s, dir) => {
     val store = idxOf(graft.core.StoreFs.buildVersion(s,
         storeRoot(s, dir, "s32")) { v =>
-      val store = idxOf(v)
-      // stage ∥ base (the s26 overlap): the planes+1 rebuild stages
-      // while the committed-geometry store writes; swap after both
-      graft.sources.Sinks.stageRewriteOverlapped(s, store,
-        rebucketIndex(s, dir), Seq("bkt")) {
-        // serving state BEFORE the trigger: committed-geometry index
-        writeStore(retrievalIndex(s, dir), store, Seq("bkt"))
-      }
+      graft.sources.Sinks.writePartitioned(s, rebucketIndex(s, dir),
+        idxOf(v), Seq("bkt"), "rebucket")
     }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))

@@ -224,10 +224,9 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * relationship replayed on the delete dimension. */
   val s27StreamDelete: Q = (s, dir) => {
     val store = idxOf(graft.core.StoreFs.buildVersion(s,
-        storeRoot(s, dir, "s27")) { v =>
-      val store = idxOf(v)
-      writeStore(baseRetrievalIndex(s, dir), store, Seq("bkt"))
-      writeStore(encodedBatch(s, dir), store, Seq("bkt"), append = true)
+        storeRoot(s, dir, "s27")) { v => compactInto(s, v) { frag =>
+      writeStore(baseRetrievalIndex(s, dir), frag, Seq("bkt"))
+      writeStore(encodedBatch(s, dir), frag, Seq("bkt"), append = true)
       val tomb = s24Tombstones(s, dir)
       val fp = graft.core.Tables.sourceFingerprint(s"$dir/documents.parquet")
       // staging key carries the delete-rule constants (a retuned rule
@@ -240,12 +239,12 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
         tag = "s27_stream_delete")(identity)
       // an empty delete set streams zero micro-batches and the harness
       // returns the empty frame: compact without tombstones (nothing
-      // to fold — compactPartitioned's empty-fold guard must not fire)
-      val any = !arrived.limit(1).isEmpty
-      graft.sources.Sinks.compactPartitioned(s, store, Seq("bkt"),
-        if (any) Some(arrived.select(col("doc_id"))) else None,
-        if (any) Seq("doc_id") else Nil)
-    }._1)
+      // to fold)
+      val fragmented = s.read.parquet(frag)
+      if (arrived.limit(1).isEmpty) fragmented
+      else graft.sources.Sinks.antiJoinTombstones(fragmented,
+        arrived.select(col("doc_id")), Seq("doc_id"))
+    }}._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
     retrieveTopK(s15QueryFrame(s, dir), idx, planes, s10K)
@@ -264,9 +263,9 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * norms are unchanged (the embedder is geometry-independent); only
     * the bucket key is recomputed, so the rebuild is the same map-only
     * encode pass as the original build. Persisted per (session, dir);
-    * the GATE writes it through the on-disk store path and swaps
-    * (see [[s26RebucketRebuild]]) — this frame is the staged content
-    * and the spec's ground truth for the swapped store. */
+    * the GATE writes it into a fresh store version (see
+    * [[s26RebucketRebuild]]) — this frame is the committed content
+    * and the spec's ground truth for the store. */
   private[operators] val rebucketReg =
     new graft.core.Registry[DataFrame](_.unpersist(false))
 
@@ -284,19 +283,17 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * (build → refresh → compact → delete → RE-BUCKET): rebuild the
     * chunk index under planes+1, commit it THROUGH THE ON-DISK STORE
     * PATH (round-15 verdict item 1), and serve the s10 query window
-    * FROM THE SWAPPED STORE through the SAME [[retrieveTopK]] with the
+    * FROM THE REBUILT STORE through the SAME [[retrieveTopK]] with the
     * new geometry on BOTH sides (query buckets and probe masks derive
     * from the index's own plane count — the keyspace contract
-    * retrieveTopK documents). The gate replays the full production
-    * sequence: the bucket-partitioned store a deployment holds under
-    * the COMMITTED geometry (what its readers are pruning on when the
-    * trigger fires), then the rebuild staged aside and committed by
-    * [[graft.sources.Sinks.rewritePartitioned]] — the same checked
-    * rename-aside protocol as compaction, which is exactly where a
-    * geometry swap earns it: the `bkt=` directory set itself changes,
-    * so a partition-pruned reader must see old or new geometry
-    * atomically, never a mix (SinksSpec pins sibling survival and the
-    * mid-swap states; SimilaritySpec pins store ≡ rebuilt index).
+    * retrieveTopK documents). The rebuild is written through
+    * [[graft.sources.Sinks.writePartitioned]] into a fresh store
+    * version, and the version's publish is the commit: the `bkt=`
+    * directory set itself changes, so a partition-pruned reader must
+    * see old or new geometry atomically, never a mix — it does, because
+    * the committed-geometry store a deployment serves while the rebuild
+    * runs is the root's previous published version, never touched
+    * (SimilaritySpec pins store ≡ rebuilt index).
     * Oracle = the s10 serving SQL with nPlanes = 7 through the SAME
     * parameterized generators (bucketSql/probeMasks) — the store must
     * be invisible to results, the plane count the only semantic diff
@@ -308,18 +305,8 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
   val s26RebucketRebuild: Q = (s, dir) => {
     val store = idxOf(graft.core.StoreFs.buildVersion(s,
         storeRoot(s, dir, "s26")) { v =>
-      val store = idxOf(v)
-      // the re-bucket rebuild STAGES CONCURRENTLY with the committed-
-      // geometry store write (guide §2.6; production reality — the
-      // offline re-encode runs while the old store serves): the staged
-      // dir is a sibling path, so the two writes never collide, and
-      // the swap (rename-aside, crash-safe) commits after both complete
-      graft.sources.Sinks.stageRewriteOverlapped(s, store,
-        rebucketIndex(s, dir), Seq("bkt")) {
-        // the store serving holds BEFORE the trigger fires: the
-        // committed-geometry index under the s21 bucket layout
-        writeStore(retrievalIndex(s, dir), store, Seq("bkt"))
-      }
+      graft.sources.Sinks.writePartitioned(s, rebucketIndex(s, dir),
+        idxOf(v), Seq("bkt"), "rebucket")
     }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
@@ -573,11 +560,10 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * the round-16 gates exercise separately, composed: a deployment
     * running s25's (bkt, qband) layout fires prof8's re-bucket trigger,
     * so the offline rebuild must re-encode the corpus under planes+1
-    * AND carry the metadata bands through the swap — the bucket
+    * AND carry the metadata bands into the new version — the bucket
     * keyspace doubles while the band dimension is untouched, and a
     * pruned reader must see old or new layout atomically on BOTH
-    * partition columns (exactly [[graft.sources.Sinks
-    * .rewritePartitioned]]'s contract). Serving is s25's shape under
+    * partition columns (the version publish gives exactly that). Serving is s25's shape under
     * the new geometry: static qband pruning + dynamic bucket pruning +
     * the exact residual, through the SAME [[retrieveTopK]] with
     * [[s26Planes]] on both sides. Two variables vs neighbors, each
@@ -585,8 +571,8 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * dimension); vs s25, the plane count (s26's dimension) — so the
     * oracle is the SAME parameterized generator with both dials set:
     * s10SqlFor(window, masks(radius 1, 7 planes), quality ≥ τ,
-    * 7 planes), fully relational, no goldens. Scale shape: one staged
-    * re-encode write + one swap per trigger firing (the s26 cost), and
+    * 7 planes), fully relational, no goldens. Scale shape: one re-encode
+    * write into a fresh version per trigger firing (the s26 cost), and
     * serving returns to target occupancy with ~20% of store bytes
     * still never listed at τ=0.6 (the s25 trade) — the composition
     * keeps both properties because the layout carries both partition
@@ -594,18 +580,11 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
   val s29BandedRebucket: Q = (s, dir) => {
     val store = idxOf(graft.core.StoreFs.buildVersion(s,
         storeRoot(s, dir, "s29")) { v =>
-      val store = idxOf(v)
-      // stage ∥ base (the s26 overlap, banded layout): geometry and
-      // directory keyspace change together, bands carry over — one
-      // staged rewrite concurrent with the committed-geometry store
-      // write, one atomic swap after both complete
-      graft.sources.Sinks.stageRewriteOverlapped(s, store,
-        withQband(rebucketIndex(s, dir)), Seq("bkt", "qband")) {
-        // the banded store a deployment serves under the committed
-        // geometry (what its pruned readers hold when the trigger fires)
-        writeStore(withQband(retrievalIndex(s, dir)), store,
-          Seq("bkt", "qband"))
-      }
+      // geometry and directory keyspace change together, bands carry
+      // over — one rewrite into the fresh version
+      graft.sources.Sinks.writePartitioned(s,
+        withQband(rebucketIndex(s, dir)), idxOf(v), Seq("bkt", "qband"),
+        "rebucket")
     }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))

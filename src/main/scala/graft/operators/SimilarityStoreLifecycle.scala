@@ -100,6 +100,22 @@ private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
     }
   }
 
+  /** THE in-build compaction of a lifecycle store (s21, s24, s27):
+    * `fragment` writes the store as its fold cadence leaves it into a
+    * scratch dir of the version `v` being built and returns the frame
+    * to keep (the scratch read, minus any tombstones); that frame is
+    * rewritten into [[idxOf]]`(v)` at one file per bucket dir and the
+    * scratch dir is deleted, all before the version publishes — so the
+    * compaction commits with the version and no reader ever sees the
+    * fragmented or a half-compacted store. */
+  private[operators] def compactInto(s: SparkSession, v: String)
+                                    (fragment: String => DataFrame): Unit = {
+    val scratch = s"$v/scratch"
+    graft.sources.Sinks.writePartitioned(s, fragment(scratch), idxOf(v),
+      Seq("bkt"), "compact")
+    graft.core.StoreFs.deleteQuietly(s, scratch)
+  }
+
   /** The arriving batch of the s15 fold, split into `parts` sub-batches
     * (modular cut on doc_id — deterministic, roughly even): the append
     * cadence that fragments the on-disk index s21 compacts. The batch
@@ -139,30 +155,30 @@ private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
     * (at 100 TB: a file-listing + task-launch storm on every query
     * batch). The gated query replays the whole lifecycle — snapshot
     * write of the base index partitioned by bucket, three batch
-    * appends (the fragmentation), [[graft.sources.Sinks
-    * .compactPartitioned]] (one file per bucket, directory layout
-    * preserved, rename-aside swap), then serves the s15 query window
-    * FROM THE COMPACTED STORE. Oracle = [[s15Sql]] verbatim: compaction
+    * appends (the fragmentation), the compaction ([[compactInto]]: one
+    * file per bucket, directory layout preserved, committed by the
+    * version's publish), then serves the s15 query window FROM THE
+    * COMPACTED STORE. Oracle = [[s15Sql]] verbatim: compaction
     * must be invisible to serving (row-identical to the refreshed
     * in-memory index ≡ full rebuild), which the spec pins alongside the
     * one-file-per-bucket layout. Cadence contract: BASELINE.md pairs
     * this with s15's fold (compact when files-per-bucket crosses the
-    * read-amplification budget; the swap is partition-pruned-reader
-    * safe because the layout never changes). Partition-column type
+    * read-amplification budget). Partition-column type
     * note: `bkt` round-trips through the directory name as an int —
     * cast back to long before the serving join so both gates join in
     * one keyspace. */
   val s21IndexCompaction: Q = (s, dir) => {
     val store = idxOf(graft.core.StoreFs.buildVersion(s,
         storeRoot(s, dir, "s21")) { v =>
-      val store = idxOf(v)
-      writeStore(baseRetrievalIndex(s, dir), store, Seq("bkt"))
-      // one file per touched bucket per fold (the writeStore
-      // discipline) — fragmentation is still linear in folds (base +
-      // 3 appends = up to 4 files/bucket), which the compaction erases
-      withS15BatchSlices(s, dir, parts = 3L)(_.foreach(
-        writeStore(_, store, Seq("bkt"), append = true)))
-      graft.sources.Sinks.compactPartitioned(s, store, "bkt")
+      compactInto(s, v) { frag =>
+        writeStore(baseRetrievalIndex(s, dir), frag, Seq("bkt"))
+        // one file per touched bucket per fold (the writeStore
+        // discipline) — fragmentation is still linear in folds (base +
+        // 3 appends = up to 4 files/bucket), which the compaction erases
+        withS15BatchSlices(s, dir, parts = 3L)(_.foreach(
+          writeStore(_, frag, Seq("bkt"), append = true)))
+        s.read.parquet(frag)
+      }
     }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))
@@ -202,8 +218,8 @@ private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
     * append-only index stores can't rewrite a file per revoked doc, so
     * deletes land as TOMBSTONES (a metadata-scale doc-id set) and are
     * FOLDED — physically removed — at the compaction cadence the store
-    * already pays for ([[graft.sources.Sinks.compactPartitioned]]'s
-    * tombstone parameter). The gated query replays the lifecycle:
+    * already pays for (the anti-join inside [[compactInto]]'s
+    * rewrite). The gated query replays the lifecycle:
     * snapshot write of the base index (partitioned by bucket), one
     * batch append (the s15 fold), the [[s24Tombstones]] delete set
     * folded at compaction, then serves the s15 query window from the
@@ -219,11 +235,12 @@ private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
   val s24IndexDelete: Q = (s, dir) => {
     val store = idxOf(graft.core.StoreFs.buildVersion(s,
         storeRoot(s, dir, "s24")) { v =>
-      val store = idxOf(v)
-      writeStore(baseRetrievalIndex(s, dir), store, Seq("bkt"))
-      writeStore(encodedBatch(s, dir), store, Seq("bkt"), append = true)
-      graft.sources.Sinks.compactPartitioned(s, store, Seq("bkt"),
-        Some(s24Tombstones(s, dir)), Seq("doc_id"))
+      compactInto(s, v) { frag =>
+        writeStore(baseRetrievalIndex(s, dir), frag, Seq("bkt"))
+        writeStore(encodedBatch(s, dir), frag, Seq("bkt"), append = true)
+        graft.sources.Sinks.antiJoinTombstones(s.read.parquet(frag),
+          s24Tombstones(s, dir), Seq("doc_id"))
+      }
     }._1)
     val idx = s.read.parquet(store)
       .withColumn("bkt", col("bkt").cast("long"))

@@ -399,8 +399,9 @@ object ZOrder {
   }
 
   /** The z3 lifecycle (build → tick → fold), planted-frame seam for
-    * the spec. Returns the SERVING store path (a fresh version when
-    * the out-of-bounds escape re-quantized). Stages, in cadence order:
+    * the spec. Returns the SERVING store path (the fold version, or a
+    * fresh build when the out-of-bounds escape re-quantized). Stages,
+    * in cadence order:
     *
     *  1. BUILD: base layout + the writer's bounds, one versioned
     *     snapshot ([[graft.core.StoreFs.buildVersion]] — publish on
@@ -408,10 +409,9 @@ object ZOrder {
     *  2. TICK: arrivals quantized under the PERSISTED bounds (read
     *     back — the reader/writer bounds contract, NOT recomputed
     *     from data) land as an idempotent batch=1 delta partition set
-    *     via the dynamic-overwrite store write (d17's discipline):
-    *     O(arrivals) work, base partitions never rewritten, and a
-    *     rectangle served between tick and fold prunes base and delta
-    *     dirs through the same static zcell filter.
+    *     via the overwriteDir store write (d17's discipline), in a
+    *     scratch dir of the fold version being built: O(arrivals)
+    *     work, the published base never written.
     *  3. OUT-OF-BOUNDS ESCAPE: an arrival outside the writer's bounds
     *     CANNOT be quantized (the integer cell rule would map it
     *     outside the grid) — that is the re-cluster trigger: rebuild
@@ -419,12 +419,12 @@ object ZOrder {
     *     NEW published version (readers on the old version stay safe
     *     under the retention window; the O(1) arrival min/max
     *     pre-flight is the trigger readout, the prof8 pattern).
-    *  4. FOLD (maintenance cadence): delta partitions rewritten into
-    *     the batch=-1 base layout through the atomic rename-aside
-    *     swap ([[graft.sources.Sinks.rewritePartitioned]]) — the
-    *     directory set changes (delta dirs disappear), exactly the
-    *     layout change that earns the swap; one file per cell again
-    *     (the compaction the tick cadence budgets, s21's cost class).
+    *  4. FOLD (maintenance cadence): base ∪ delta rewritten in the
+    *     batch=-1 base layout ([[graft.sources.Sinks.writePartitioned]])
+    *     next to a copy of the bounds, in the same fold version of
+    *     `storeRoot(dir, s"$tag-fold")`, whose publish commits the
+    *     tick and the fold together; one file per cell again (the
+    *     compaction the tick cadence budgets, s21's cost class).
     */
   private[operators] def z3TickFold(s: SparkSession, dir: String,
       tag: String, base: DataFrame, arrivals: DataFrame,
@@ -445,17 +445,34 @@ object ZOrder {
       afterStage("requantize", widened)
       widened
     } else {
-      Similarity.writeStore(
-        zedUnder(arrivals, minU, maxU, minD, maxD),
-        s"$store/data/batch=1", Seq("zcell"), overwriteDir = true,
-        rowKeyCols = Seq("user_id", "day", "event_id"))
-      afterStage("tick", store)
-      val folded = s.read.parquet(s"$store/data")
-        .drop("batch").withColumn("batch", lit(-1L))
-      graft.sources.Sinks.rewritePartitioned(s, s"$store/data",
-        folded, Seq("batch", "zcell"))
-      afterStage("fold", store)
-      store
+      val fold = Similarity.idxOf(graft.core.StoreFs.buildVersion(s,
+          Similarity.storeRoot(s, dir, s"$tag-fold")) { v =>
+        val tick = s"$v/scratch"
+        Similarity.writeStore(
+          zedUnder(arrivals, minU, maxU, minD, maxD),
+          s"$tick/data/batch=1", Seq("zcell"), overwriteDir = true,
+          rowKeyCols = Seq("user_id", "day", "event_id"))
+        afterStage("tick", tick)
+        val out = Similarity.idxOf(v)
+        // the bounds row carries over byte for byte: a file copy, no job
+        val conf = s.sparkContext.hadoopConfiguration
+        val bounds = new org.apache.hadoop.fs.Path(s"$store/bounds")
+        val fs = bounds.getFileSystem(conf)
+        require(org.apache.hadoop.fs.FileUtil.copy(fs, bounds, fs,
+          new org.apache.hadoop.fs.Path(s"$out/bounds"), false, conf),
+          s"could not copy $bounds into $out")
+        // the delta reads under the base's schema (same writer, same
+        // partition columns), so it plans with no inference job
+        val baseRows = s.read.parquet(s"$store/data")
+        val folded = baseRows
+          .unionByName(s.read.schema(baseRows.schema).parquet(s"$tick/data"))
+          .drop("batch").withColumn("batch", lit(-1L))
+        graft.sources.Sinks.writePartitioned(s, folded, s"$out/data",
+          Seq("batch", "zcell"), "fold")
+        graft.core.StoreFs.deleteQuietly(s, tick)
+      }._1)
+      afterStage("fold", fold)
+      fold
     }
   }
 

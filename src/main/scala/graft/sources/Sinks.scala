@@ -51,13 +51,21 @@ import org.apache.spark.sql.types._
   * the reference's per-table batch usage); the protocol adds crash
   * atomicity and reader consistency, not multi-writer conflict
   * resolution.
+  *
+  * == Store rewrites ==
+  * The versioned lifecycle stores (compaction, tombstone fold,
+  * re-bucket, tick folds) are never rewritten in place: each rewrite
+  * writes through [[writePartitioned]] into a version that
+  * [[graft.core.StoreFs.buildVersion]] has not published yet, and the
+  * publish is the commit — the Delta model, where OPTIMIZE and DELETE
+  * each commit a new table version.
   */
 object Sinks {
 
   /** Test hook (SinksSpec crash injection): when >= 0, the Nth swap
-    * rename of the NEXT commit throws before executing (0 = crash after
-    * the marker is written but before any rename). Recovery runs ignore
-    * the hook. Always reset to -1 after use. */
+    * rename of the NEXT marker-protocol commit throws before executing
+    * (0 = crash after the marker is written but before any rename).
+    * Recovery runs ignore the hook. Always reset to -1 after use. */
   @volatile private[graft] var crashBeforeRename: Int = -1
 
   /** S5: full overwrite (schema replaced by construction on Parquet).
@@ -68,212 +76,54 @@ object Sinks {
     out.write.mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** THE rename-aside swap shared by both compaction rewrites (old
-    * table → side dir, staged → table, delete side): a crash never
-    * loses data — worst case the table is at the side path,
-    * recoverable by hand or vacuum-visible. Each rename result is
-    * CHECKED: HDFS-style FileSystems report failure by returning
-    * false, not throwing, and an unchecked false here would silently
-    * serve the uncompacted table while orphaning the full staged
-    * rewrite. On a false the swap throws with both paths named; the
-    * staged copy (and after the first rename, the side copy) stays on
-    * disk for recovery — deleting either on the failure path could
-    * destroy the only complete copy when the failure cause is unknown. */
-  private def swapInPlace(spark: SparkSession, path: String,
-                          staged: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val side = new Path(s"$path-staging-old-${UUID.randomUUID().toString.take(8)}")
-    // the same test-only crash hook the marker-commit path exposes —
-    // lets specs pin the documented mid-swap states (old table intact
-    // before rename #0; old at side + staged complete before #1)
-    def crashCheck(n: Int): Unit =
-      if (crashBeforeRename == n) throw new IllegalStateException(
-        s"graft test crash injection before rename #$n")
-    crashCheck(0)
-    require(fs.rename(new Path(path), side),
-      s"swap failed: could not move $path aside to $side (staged copy kept at $staged)")
-    crashCheck(1)
-    require(fs.rename(new Path(staged), new Path(path)),
-      s"swap failed: could not move staged $staged into $path (old table kept at $side)")
-    fs.delete(side, true)
-  }
-
-  /** S7: compaction — rewrite a table at a target file count via the
-    * checked rename-aside [[swapInPlace]]. */
+  /** S7: compaction — rewrite a table at a target file count: staged
+    * beside the table, then a rename-aside swap (old table → side dir,
+    * staged → table, delete side). A crash never loses data — worst
+    * case the table is at the side path. Each rename result is
+    * CHECKED: HDFS-style FileSystems report failure by returning false,
+    * not throwing; on a false the swap throws with both paths named and
+    * keeps the staged (and side) copy on disk, since deleting either
+    * could destroy the only complete copy when the cause is unknown. */
   def compact(spark: SparkSession, path: String, targetFiles: Int = 1): Unit = {
     val df = spark.read.parquet(path)
     // Materialize before overwriting the path being read.
     val staged = stagePath(path)
     df.coalesce(math.max(targetFiles, 1)).write.parquet(staged)
-    swapInPlace(spark, path, staged)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val side = new Path(s"$path-staging-old-${UUID.randomUUID().toString.take(8)}")
+    require(fs.rename(new Path(path), side),
+      s"swap failed: could not move $path aside to $side (staged copy kept at $staged)")
+    require(fs.rename(new Path(staged), new Path(path)),
+      s"swap failed: could not move staged $staged into $path (old table kept at $side)")
+    fs.delete(side, true)
   }
 
-  /** PARTITION-LAYOUT-PRESERVING compaction (the Delta `OPTIMIZE`
-    * analog for a `partitionBy(partCol)` table): every append to such a
-    * table adds at least one file per touched `partCol=v` directory, so
-    * a fold-in cadence (s15/s18-style index refresh, i-family backfill)
-    * fragments each partition into one small file per batch — the
-    * classic small-file problem that at 100 TB turns a partition-pruned
-    * scan into a file-listing + task-launch storm. This rewrite keeps
-    * the DIRECTORY layout (readers keep pruning on `partCol=v`) and
-    * folds each partition's file set to exactly one file: the
-    * `repartition(col(partCol))` shuffle routes every row of a
-    * partition value to a single task, and `partitionBy` then emits one
-    * file per value per task. Same checked rename-aside [[swapInPlace]]
-    * as [[compact]] — a crash never loses data, and the swap touches
-    * ONLY `path` (a sibling table next to it is never read, renamed,
-    * or deleted: SinksSpec plants one and asserts survival, the
-    * standing destructive-utility rule). */
-  def compactPartitioned(spark: SparkSession, path: String,
-                         partCol: String): Unit =
-    compactPartitioned(spark, path, Seq(partCol), None, Nil)
-
-  /** Generalized layout-preserving compaction: multi-column partition
-    * layouts (`partCols` — e.g. an index store partitioned by bucket
-    * AND metadata band), and an optional TOMBSTONE FOLD — the delete
-    * path of an append-only store (the Delta `DELETE` + `OPTIMIZE`
-    * analog): rows whose `keyCols` match a tombstone row are dropped
-    * from the rewrite, so the delete is applied exactly once, at the
-    * maintenance cadence the store already pays for, with no
-    * read-amplifying per-file rewrite of its own. Until this fold
-    * runs, readers serve THROUGH the tombstones (anti-join at read
-    * time — see Similarity's delete-aware serving); after it, the
-    * store physically equals a rebuild-minus-deleted and the tombstone
-    * set can be retired (the caller owns the tombstone artifact's
-    * lifecycle — this fold only consumes it). Tombstones are delete
-    * METADATA (doc ids a curation gate retro-dropped) — broadcast by
-    * contract, never corpus-sized; a partition whose rows are all
-    * deleted simply has no directory in the rewrite. Same checked
-    * rename-aside [[swapInPlace]]; siblings are never touched. */
-  def compactPartitioned(spark: SparkSession, path: String,
-                         partCols: Seq[String],
-                         tombstones: Option[DataFrame],
-                         keyCols: Seq[String]): Unit = {
-    require(partCols.nonEmpty, "compactPartitioned needs partition columns")
-    require(tombstones.isEmpty == keyCols.isEmpty,
-      "tombstones and keyCols come together")
-    val read = spark.read.parquet(path)
-    val df = tombstones.fold(read)(t =>
-      antiJoinTombstones(read, t, keyCols))
-    // a fold that deletes EVERYTHING would swap in a dir holding only
-    // _SUCCESS — unreadable (no schema) — and brick the store; whole-
-    // store deletion is an explicit drop, not a compaction. The guard
-    // is the shared staged-output check (see stageSwapChecked).
-    stageSwapChecked(spark, path, df, partCols,
-      "compactPartitioned")
-  }
-
-  /** WHOLE-TABLE REWRITE under a possibly DIFFERENT partition keyspace
-    * — the third swap client next to [[compact]]/[[compactPartitioned]]
-    * and the commit step of an index RE-BUCKET (Similarity's s26): the
-    * trigger's offline job re-encodes the corpus under the new
-    * geometry, so unlike compaction the staged content does not derive
-    * from the old store — the caller provides it — and the directory
-    * LAYOUT itself is what changes (the bucket keyspace doubles), which
-    * is exactly why the commit must be the atomic swap and not an
-    * in-place mutation: a partition-pruned reader must see the old
-    * geometry or the new one, never a mix of `bkt=` dirs from both.
-    * Same checked rename-aside [[swapInPlace]] crash contract (data is
-    * never lost — worst case the old table sits at the side path with
-    * the staged copy intact), and the swap touches ONLY `path`:
-    * siblings survive (the standing destructive-utility rule,
-    * spec-pinned like the compaction rewrites). */
-  def rewritePartitioned(spark: SparkSession, path: String,
-                         df: DataFrame, partCols: Seq[String]): Unit = {
-    require(partCols.nonEmpty, "rewritePartitioned needs partition columns")
-    stageSwapChecked(spark, path, df, partCols, "rewritePartitioned")
-  }
-
-  /** The STAGE half of [[rewritePartitioned]], split out so a caller
-    * can overlap the staged re-encode with other independent work —
-    * production reality for a re-bucket: the offline rebuild job stages
-    * its output WHILE the old store keeps serving (and, in the gated
-    * replays, while the old store is still being written). Same
-    * empty-output guard as the fused path; returns the staged dir for
-    * [[commitStagedRewrite]]. The staged dir is a sibling of `path`
-    * (`$path-staging-*`), so it never collides with a concurrent write
-    * of `path` itself. */
-  private[graft] def stageRewrite(spark: SparkSession, path: String,
-                                  df: DataFrame,
-                                  partCols: Seq[String]): String = {
-    require(partCols.nonEmpty, "stageRewrite needs partition columns")
-    stageChecked(spark, path, df, partCols, "rewritePartitioned")
-  }
-
-  /** The COMMIT half of [[rewritePartitioned]]: the checked
-    * rename-aside swap of a dir staged by [[stageRewrite]]. Must run
-    * AFTER every write of `path` has completed — the swap renames the
-    * whole table dir. */
-  private[graft] def commitStagedRewrite(spark: SparkSession, path: String,
-                                         staged: String): Unit =
-    swapInPlace(spark, path, staged)
-
-  /** [[stageRewrite]] overlapped with an independent `base` write of
-    * `path` itself (guide §2.6 — the offline re-encode stages while
-    * the committed-geometry store writes), then the swap commit. Owns
-    * the round-20 ADVICE cleanup: if `base` fails after the rewrite
-    * staged successfully, the staged store-sized dir is deleted here
-    * instead of orphaned until the next retention sweep. Failures of
-    * the COMMIT itself keep everything, as swapInPlace documents — the
-    * staged dir may be the only copy of the new data mid-swap. */
-  private[graft] def stageRewriteOverlapped(spark: SparkSession,
-                                            path: String, df: DataFrame,
-                                            partCols: Seq[String])
-                                           (base: => Any): Unit = {
-    @volatile var staged: String = null
-    val st = try {
-      graft.core.Jobs.concurrently {
-        val s0 = stageRewrite(spark, path, df, partCols)
-        staged = s0
-        s0
-      } { base }._1
-    } catch { case e: Throwable =>
-      // concurrently awaits the stage side before propagating a base
-      // failure, so `staged` is final here: non-null means the staged
-      // dir exists, complete, and will never be swapped in
-      if (staged != null) graft.core.StoreFs.deleteQuietly(spark, staged)
-      throw e
-    }
-    commitStagedRewrite(spark, path, st)
-  }
-
-  /** THE guarded commit shared by every partitioned swap client
-    * (compaction's tombstone fold, the re-bucket rewrite): stage the
-    * partitioned write, REFUSE the swap if the staged output holds no
-    * data files — swapping a schema-less dir (_SUCCESS only) in would
-    * brick the store; whole-store deletion is an explicit drop, not a
-    * rewrite. The guard runs on the STAGED OUTPUT, after the write
-    * (round-16 advice): checking the input frame cost an extra
-    * limit(1) job AND guarded the wrong thing — a frame racing to
-    * empty between check and write would still have swapped an empty
-    * table in; one listing of what actually swaps closes both, for ALL
-    * swap clients (a review pass found the first cut fixed only one).
-    * The empty staged dir is deleted before refusing: by definition it
-    * holds no data, so this cannot destroy the only copy of anything
-    * (unlike the swap failure paths, which keep everything). */
-  private def stageSwapChecked(spark: SparkSession, path: String,
-                               df: DataFrame, partCols: Seq[String],
-                               what: String): Unit =
-    swapInPlace(spark, path, stageChecked(spark, path, df, partCols, what))
-
-  private def stageChecked(spark: SparkSession, path: String,
-                           df: DataFrame, partCols: Seq[String],
-                           what: String): String = {
-    val staged = stagePath(path)
-    // phase label (guide §1.5): the staged rewrite is the dominant job
-    // of every swap client — name it so profilers attribute the cost
-    try graft.core.Jobs.labeled(spark,
-      s"$what stage ${new Path(path).getName}") {
+  /** THE write of every partitioned store rewrite — compaction, the
+    * tombstone fold, a re-bucket, a tick fold (the Delta `OPTIMIZE` /
+    * `DELETE` analogs): `df` lands in `target`, a path inside a store
+    * version that [[graft.core.StoreFs.buildVersion]] has not published
+    * yet, so readers see the old version or the new one and nothing is
+    * ever swapped. `repartition` on `partCols` routes every row of a
+    * partition value to one task, and `partitionBy` then writes one
+    * file per partition dir: a store fragmented by appends comes out at
+    * one file per dir with its directory layout, and a frame under a
+    * new keyspace comes out under that keyspace. An output with no data
+    * files is refused — a schema-less dir (`_SUCCESS` only) would brick
+    * the store, and whole-store deletion is an explicit drop: the
+    * target is deleted and the call throws, which fails the enclosing
+    * build so nothing is published. The check lists what was written,
+    * after the write: checking the input frame would cost a job and
+    * race a frame that empties between check and write. */
+  def writePartitioned(spark: SparkSession, df: DataFrame, target: String,
+                       partCols: Seq[String], what: String): Unit = {
+    require(partCols.nonEmpty, s"$what needs partition columns")
+    // phase label: the rewrite is the dominant job of its build
+    graft.core.Jobs.labeled(spark,
+      s"$what stage ${new Path(target).getName}") {
       df.repartition(partCols.map(col): _*)
-        .write.partitionBy(partCols: _*).parquet(staged)
-    } catch { case e: Throwable =>
-      // a failed/interrupted stage write must not orphan its partial
-      // store-sized output (round-20 ADVICE) — the dir is ours alone
-      // (UUID-suffixed) and holds no committed data, so delete it
-      graft.core.StoreFs.deleteQuietly(spark, staged)
-      throw e
+        .write.partitionBy(partCols: _*).parquet(target)
     }
-    val fs = new Path(staged)
+    val fs = new Path(target)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a listStatus walk, not listFiles: listFiles builds each
     // LocatedFileStatus from the entry's permissions, which the local
@@ -283,18 +133,17 @@ object Sinks {
       if (st.isDirectory) hasData(st.getPath)
       else !name.startsWith("_") && !name.startsWith(".")
     }
-    if (!hasData(new Path(staged))) {
-      fs.delete(new Path(staged), true)
+    if (!hasData(new Path(target))) {
+      fs.delete(new Path(target), true)
       throw new IllegalArgumentException(
-        s"requirement failed: $what would swap an empty table " +
-          s"into $path — refusing; drop the store explicitly instead")
+        s"requirement failed: $what would commit an empty table " +
+          s"at $target — refusing; drop the store explicitly instead")
     }
-    staged
   }
 
   /** THE tombstone anti-join — one definition for the read-time
     * serve-through path (Similarity.serveThroughTombstones) and the
-    * compaction fold above, so the two cannot drift apart (the s24
+    * compaction folds (s24, s27, d18), so the two cannot drift apart (the s24
     * gate's core claim is their row-identity). Tombstones broadcast by
     * contract (delete sets are metadata-scale). */
   private[graft] def antiJoinTombstones(df: DataFrame, tombstones: DataFrame,

@@ -69,7 +69,7 @@ object PlanAudit {
     "s28_learned_hybrid", // trained-dense + BM25 legs fused by RRF, golden-keyed
     "d16_ingest_tick",   // one foreachBatch: verdict + tag + dense/sparse folds; readbacks off refreshed artifacts
     "d17_tick_store",    // tick folds as batch= partitions of a versioned snapshot; readbacks prune on batch
-    "d18_tick_maintain", // tick -> delta+tombstone fold swap -> rebucket-due readout -> pruned serving
+    "d18_tick_maintain", // tick -> delta+tombstone fold version -> rebucket-due readout -> pruned serving
     "d19_multi_tick",    // 3-tick converged store served through the s10 probe join
     "z1_zorder_prune",   // static Morton-cell partition pruning + pushed exact residual
     "c5_curation_funnel", // doc-keyed LEFT-join disposition CASE, O(stages x sources) aggregate
@@ -77,7 +77,7 @@ object PlanAudit {
     "s30_version_diff",  // two doc-level count frames full-outer joined: O(docs), not O(chunks)
     "u15_cluster_split", // broadcast cluster frame LEFT join + map-side hash/CASE
     "s31_ann_recall",    // three serving legs + semi-joins over batch-x-k frames
-    "s32_post_event_recall", // served + exact-twin legs off ONE post-swap store lineage
+    "s32_post_event_recall", // served + exact-twin legs off ONE rebuilt store version
     "c6_funnel_drift",   // one disposition pass -> O(sources x stages) bins -> metadata-scale PSI
     "z2_zorder_ranges",  // BIGMIN ranges as BETWEEN partition filters — the 2^20-grid serving form
     "z3_zorder_tick",    // incremental z-fold: tick under persisted bounds, maintenance fold, range-pruned serve

@@ -500,40 +500,52 @@ class DedupSpec extends SparkSpec {
     } finally graft.core.StoreFs.deleteQuietly(spark, root)
   }
 
-  test("d18 tick-then-maintain: the fold collapses delta partitions " +
-    "into the batch=-1 base layout and physically removes tombstoned " +
-    "docs on BOTH sides; the health readout matches the integer " +
-    "trigger rule; a crash mid-swap leaves the store serving the " +
-    "pre-fold content (delta dirs + tombstones intact)") {
-    val (_, store) = Dedup.tickStore(spark, dir, "d18_tick_maintain",
+  test("d18 tick-then-maintain: the fold writes a new version holding " +
+    "both sides in the batch=-1 base layout with tombstoned docs " +
+    "physically removed; the health readout matches the integer trigger " +
+    "rule; a failure between the dense and sparse writes publishes " +
+    "nothing and leaves both tick sides unchanged") {
+    val tag = "d18_tick_maintain"
+    val (_, store) = Dedup.tickStore(spark, dir, tag,
       Seq(Dedup.d11Res), probe = identity)
+    val foldRoot = Similarity.storeRoot(spark, dir, s"$tag-fold")
+    val heldFold = graft.core.StoreFs.currentVersion(foldRoot)
     val preDense = denseSet(Dedup.tickSide(spark, store, "dense"))
-    val preLayout = batchDirs(store, "dense")
-    assert(preLayout.exists(_ >= 0), "tick left no delta partitions")
-    // crash before rename #0 of the dense fold swap: the serving store
-    // is untouched — same rows, same delta layout — and the version
-    // stays recoverable by simply re-running the maintenance
-    graft.sources.Sinks.crashBeforeRename = 0
-    try intercept[IllegalStateException] {
-      Dedup.d18Maintain(spark, dir, store)
-    } finally graft.sources.Sinks.crashBeforeRename = -1
-    assert(batchDirs(store, "dense") === preLayout,
-      "crashed fold changed the store layout")
+    val preSparse = sparseSet(Dedup.tickSide(spark, store, "sparse"))
+    val preLayout = (batchDirs(store, "dense"), batchDirs(store, "sparse"))
+    assert(preLayout._1.exists(_ >= 0), "tick left no delta partitions")
+    // a failure after the fold's dense write, before its sparse write:
+    // the fold version is never published and the tick store (only
+    // ever read by the fold) keeps both sides as they were
+    intercept[IllegalStateException] {
+      Dedup.d18Maintain(spark, dir, tag, store, leg =>
+        if (leg == "dense") throw new IllegalStateException(
+          "injected failure between the dense and sparse fold writes"))
+    }
+    assert(graft.core.StoreFs.currentVersion(foldRoot) === heldFold,
+      "a failed fold published a version")
+    assert((batchDirs(store, "dense"), batchDirs(store, "sparse"))
+      === preLayout, "failed fold changed the tick store layout")
     assert(denseSet(Dedup.tickSide(spark, store, "dense")) === preDense,
-      "crashed fold changed the served rows")
+      "failed fold changed the dense tick side")
+    assert(sparseSet(Dedup.tickSide(spark, store, "sparse")) === preSparse,
+      "failed fold changed the sparse tick side")
     // the rerun folds through: single base partition, tombstoned rows
     // physically gone, survivors ≡ rebuild-minus-deleted on both sides
     val legs = scala.collection.mutable.ArrayBuffer[String]()
-    val health = Dedup.d18Maintain(spark, dir, store, legs += _)
-    assert(legs.toSeq === Seq("fold", "health"))
-    assert(batchDirs(store, "dense") === Seq(-1L), "delta dirs survived")
-    assert(batchDirs(store, "sparse") === Seq(-1L), "delta dirs survived")
+    val (health, folded) = Dedup.d18Maintain(spark, dir, tag, store, legs += _)
+    assert(legs.toSeq === Seq("dense", "sparse", "fold", "health"))
+    assert(folded === Similarity.idxStore(spark, dir, s"$tag-fold"),
+      "the fold version was not published")
+    assert(folded !== store)
+    assert(batchDirs(folded, "dense") === Seq(-1L), "delta dirs survived")
+    assert(batchDirs(folded, "sparse") === Seq(-1L), "delta dirs survived")
     val keep = pmod(col("doc_id"), lit(Similarity.s24DelMod)) =!=
       lit(Similarity.s24DelRes)
-    assert(denseSet(Dedup.tickSide(spark, store, "dense"))
+    assert(denseSet(Dedup.tickSide(spark, folded, "dense"))
       === denseSet(Similarity.retrievalIndex(spark, dir).filter(keep)),
       "folded dense side != rebuild-minus-deleted")
-    assert(sparseSet(Dedup.tickSide(spark, store, "sparse"))
+    assert(sparseSet(Dedup.tickSide(spark, folded, "sparse"))
       === sparseSet(Similarity.rawPostingsFull(spark, dir).filter(keep)),
       "folded sparse side != rebuild-minus-deleted")
     // health readout ≡ the prof8 trigger arithmetic over the folded rows

@@ -19,8 +19,8 @@ class ForkFreeWriteSpec extends SparkSpec {
     stat.substring(stat.lastIndexOf(')') + 2).split(' ')(8).toLong
   }
 
-  test("a writeStore partitioned write, a compactPartitioned swap and a " +
-    "checkpointed stream micro-batch spawn no child process") {
+  test("a writeStore partitioned write, a writePartitioned rewrite of it " +
+    "and a checkpointed stream micro-batch spawn no child process") {
     assume(Files.isReadable(Paths.get("/proc/self/stat")),
       "needs Linux /proc")
     val s = spark
@@ -34,9 +34,10 @@ class ForkFreeWriteSpec extends SparkSpec {
     rows.coalesce(1).write.parquet(s"$base/in")
 
     def writes(tag: String): Unit = {
-      val store = s"$base/$tag/store"
-      Similarity.writeStore(docs, store, Seq("bkt"))
-      Sinks.compactPartitioned(spark, store, "bkt")
+      val frag = s"$base/$tag/frag"
+      Similarity.writeStore(docs, frag, Seq("bkt"))
+      Sinks.writePartitioned(spark, spark.read.parquet(frag),
+        s"$base/$tag/store", Seq("bkt"), "compact")
       Streams.ingestAvailableNow(
         spark.readStream.schema(rows.schema).parquet(s"$base/in"),
         s"$base/$tag/ingest", s"$base/$tag/ckpt", "dt_ref", "dt_year")

@@ -882,10 +882,11 @@ class SimilaritySpec extends SparkSpec {
       val n = d.listFiles().count(_.getName.endsWith(".parquet"))
       assert(n === 1, s"${d.getName}: $n files after compaction")
     }
-    val leftovers = store.getParentFile.listFiles()
-      .filter(_.getName.contains("-staging"))
-    assert(leftovers.isEmpty,
-      s"staging leftovers: ${leftovers.map(_.getName).toSeq}")
+    // the fragmented scratch store is deleted before the version
+    // publishes: the version holds the compacted index alone
+    val leftovers = store.getParentFile.listFiles().map(_.getName)
+      .filter(_ != "idx")
+    assert(leftovers.isEmpty, s"staging leftovers: ${leftovers.toSeq}")
   }
 
   test("index delete (s24): serving the tombstone-folded store equals " +
@@ -1108,10 +1109,10 @@ class SimilaritySpec extends SparkSpec {
       "no chunk landed above the old 2^6 keyspace — plane 7 is dead")
     assert(b7.getLong(0) > b6,
       s"rebuild did not widen the occupied bucket set (${b7.getLong(0)} vs $b6)")
-    // the gate serves from the PHYSICAL swapped store (round-15 verdict
+    // the gate serves from the PHYSICAL rebuilt store (round-15 verdict
     // item 1): its content must equal the rebuilt index row-for-row,
     // its directory layout must carry the widened keyspace, and the
-    // swap must leave no staging residue in the version dir
+    // version dir must hold nothing but the index
     val storePath = Similarity.idxStore(spark, dir, "s26")
     val store = spark.read.parquet(storePath)
     def keyed(df: org.apache.spark.sql.DataFrame) =
@@ -1119,16 +1120,15 @@ class SimilaritySpec extends SparkSpec {
         col("bkt").cast("long")).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     assert(keyed(store) === keyed(Similarity.rebucketIndex(spark, dir)),
-      "swapped store content diverges from the rebuilt index")
+      "store content diverges from the rebuilt index")
     val bktDirs = new java.io.File(localPath(storePath)).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bkt="))
       .map(_.getName.stripPrefix("bkt=").toLong)
     assert(bktDirs.exists(_ >= 64L),
       "on-disk layout did not widen past the old 2^6 keyspace")
-    val leftovers = new java.io.File(localPath(storePath)).getParentFile.listFiles()
-      .filter(_.getName.contains("-staging"))
-    assert(leftovers.isEmpty,
-      s"swap staging leftovers: ${leftovers.map(_.getName).toSeq}")
+    val leftovers = new java.io.File(localPath(storePath)).getParentFile
+      .listFiles().map(_.getName).filter(_ != "idx")
+    assert(leftovers.isEmpty, s"version leftovers: ${leftovers.toSeq}")
   }
 
   test("banded store (s25): filtered serving is row-identical to s22's " +
@@ -1305,12 +1305,14 @@ class SimilaritySpec extends SparkSpec {
     graft.SparkEntry.queries("s26_rebucket_rebuild")(spark, dir)
     val held = Similarity.idxStore(spark, dir, "s26")
     assert(new java.io.File(localPath(held)).exists())
-    // inject a failure into the build's swap: the allocated version
+    // a build of the same root that fails: the allocated version
     // stays unpublished
-    graft.sources.Sinks.crashBeforeRename = 0
-    try intercept[IllegalStateException] {
-      graft.SparkEntry.queries("s26_rebucket_rebuild")(spark, dir)
-    } finally graft.sources.Sinks.crashBeforeRename = -1
+    intercept[IllegalStateException] {
+      graft.core.StoreFs.buildVersion(spark,
+        Similarity.storeRoot(spark, dir, "s26")) { _ =>
+        throw new IllegalStateException("injected build failure")
+      }
+    }
     assert(Similarity.idxStore(spark, dir, "s26") === held,
       "a failed build must not publish")
     // the next SUCCESSFUL build keeps {new, held} — if retention were

@@ -134,8 +134,8 @@ class ZOrderSpec extends SparkSpec {
         st match {
           case "build" => assert(batchDirs(path) === Seq("batch=-1"))
           case "tick" =>
-            assert(batchDirs(path) === Seq("batch=-1", "batch=1"),
-              "tick must land as a batch=1 delta beside the base")
+            assert(batchDirs(path) === Seq("batch=1"),
+              "tick must land as a batch=1 delta in the fold's build")
           case "fold" => assert(batchDirs(path) === Seq("batch=-1"),
             "fold must rewrite deltas into the single base layout")
           case other => fail(s"unexpected stage $other")
@@ -143,6 +143,15 @@ class ZOrderSpec extends SparkSpec {
       })
     assert(stages.map(_._1) === Vector("build", "tick", "fold"),
       "in-bounds arrivals must take the tick path, not the escape")
+    // the tick and the fold commit as a NEW version: the published
+    // build is only read, and the tick's scratch is gone
+    val built = stages(0)._2
+    assert(store === stages(2)._2)
+    assert(store !== built,
+      "the fold must publish a new version, not mutate the built one")
+    assert(batchDirs(built) === Seq("batch=-1"), "the built version changed")
+    assert(!new java.io.File(localPath(stages(1)._2)).exists(),
+      "the tick's scratch dir survived the fold")
     // fold ≡ rebuild: store content equals re-quantization of
     // base ∪ arrivals under the PERSISTED (base-derived) bounds
     val b = spark.read.parquet(s"$store/bounds").collect()(0)

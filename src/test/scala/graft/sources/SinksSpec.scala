@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.SparkSpec
+import graft.core.StoreFs
 
 /** S5/S6/S7 sink semantics — especially the Delta-replaceWhere emulation:
   * slice replacement, idempotency, multi-partition slices, new-partition
@@ -266,166 +267,133 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.parquet(path).as[Int].collect().toSet === (1 to 100).toSet)
   }
 
-  test("compactPartitioned: appends fragment every partition dir, the " +
-    "rewrite folds each to ONE file with layout + rows preserved, and a " +
-    "planted sibling table survives (destructive-utility rule)") {
-    val root = tmpDir("sinks-cp")
-    val path = root + "/t"
+  private def walk(p: String) = Files.walk(Paths.get(p)).toArray
+    .map(_.toString).sorted.toSeq
+  private def partDirs(p: String) = Files.list(Paths.get(p)).toArray
+    .map(_.toString).filter(_.matches(".*/k=\\d+")).sorted.toSeq
+  private def partKeys(p: String) =
+    partDirs(p).map(_.split("k=").last.toInt)
+  private def filesIn(d: String) = Files.list(Paths.get(d)).toArray
+    .map(_.toString).count(_.endsWith(".parquet"))
+  private def names(p: String) = Files.list(Paths.get(p)).toArray
+    .map(_.toString.split('/').last).sorted.toSeq
+
+  test("writePartitioned compaction: appends fragment every partition " +
+    "dir of a version's scratch store, the rewrite into the unpublished " +
+    "version folds each to ONE file with layout + rows preserved, and a " +
+    "planted sibling survives") {
+    val base = tmpDir("sinks-cp")
+    val root = base + "/t"
     def slice(tag: Int) =
       (1 to 30).map(n => (n % 3, tag * 100 + n)).toDF("k", "v")
-    // snapshot + two appends: every k=v dir collects 3 files
-    slice(0).repartition(col("k")).write.partitionBy("k").parquet(path)
-    Seq(1, 2).foreach(t => slice(t).write.mode("append")
-      .partitionBy("k").parquet(path))
-    def partDirs = Files.list(Paths.get(path)).toArray.map(_.toString)
-      .filter(_.matches(".*/k=\\d+")).sorted
-    def filesIn(d: String) = Files.list(Paths.get(d)).toArray
-      .map(_.toString).count(_.endsWith(".parquet"))
-    assert(partDirs.length === 3)
-    assert(partDirs.forall(filesIn(_) >= 3), "appends did not fragment")
-    val before = spark.read.parquet(path)
-      .as[(Int, Int)].collect().sorted.toSeq
-    // planted survivor: a sibling table next to the compacted one
-    val sibling = root + "/t2"
+    // planted survivor: a sibling table next to the store root
+    val sibling = base + "/t2"
     slice(9).write.partitionBy("k").parquet(sibling)
-    val siblingBefore = Files.walk(Paths.get(sibling)).toArray
-      .map(_.toString).sorted.toSeq
-
-    Sinks.compactPartitioned(spark, path, "k")
-
-    assert(partDirs.length === 3, "partition layout changed")
-    partDirs.foreach(d => assert(filesIn(d) === 1, s"$d not compacted"))
-    assert(spark.read.parquet(path)
-      .as[(Int, Int)].collect().sorted.toSeq === before)
-    assert(Files.walk(Paths.get(sibling)).toArray
-      .map(_.toString).sorted.toSeq === siblingBefore,
-      "sibling table was touched")
-    val leftovers = Files.list(Paths.get(root)).toArray.map(_.toString)
-      .filter(_.contains("-staging"))
-    assert(leftovers.isEmpty, s"staging leftovers: ${leftovers.toSeq}")
+    val siblingBefore = walk(sibling)
+    var fragKeys = Seq.empty[Int]
+    val (v, _) = StoreFs.buildVersion(spark, root) { v =>
+      // snapshot + two appends: every k=v dir collects 3 files
+      val frag = s"$v/scratch"
+      slice(0).repartition(col("k")).write.partitionBy("k").parquet(frag)
+      Seq(1, 2).foreach(t => slice(t).write.mode("append")
+        .partitionBy("k").parquet(frag))
+      fragKeys = partKeys(frag)
+      assert(partDirs(frag).forall(filesIn(_) >= 3), "appends did not fragment")
+      Sinks.writePartitioned(spark, spark.read.parquet(frag), s"$v/idx",
+        Seq("k"), "compact")
+      StoreFs.deleteQuietly(spark, frag)
+    }
+    assert(StoreFs.currentVersion(root) === v)
+    assert(fragKeys === Seq(0, 1, 2))
+    assert(partKeys(s"$v/idx") === fragKeys, "partition layout changed")
+    partDirs(s"$v/idx").foreach(d =>
+      assert(filesIn(d) === 1, s"$d not compacted"))
+    val expected = Seq(0, 1, 2).map(slice).reduce(_ union _)
+      .as[(Int, Int)].collect().sorted.toSeq
+    assert(spark.read.parquet(s"$v/idx").select("k", "v")
+      .as[(Int, Int)].collect().sorted.toSeq === expected)
+    assert(names(v) === Seq("idx"), "scratch left in the published version")
+    assert(walk(sibling) === siblingBefore, "sibling table was touched")
   }
 
-  test("compactPartitioned tombstone fold: exactly the tombstoned keys " +
+  test("writePartitioned tombstone fold: exactly the tombstoned keys " +
     "are dropped, survivors + layout intact, emptied partition dir " +
-    "removed, planted sibling survives") {
-    val root = tmpDir("sinks-tomb")
-    val path = root + "/t"
-    // k=0..3; all of k=3's rows share key 30 → its dir must VANISH
+    "absent, planted sibling survives") {
+    val base = tmpDir("sinks-tomb")
+    val root = base + "/t"
+    // k=0..3; all of k=3's rows share key 30 → its dir must not appear
     def slice(tag: Int) =
       ((1 to 30).map(n => (n % 3, n, tag * 100 + n)) :+ (3, 30, tag))
         .toDF("k", "id", "v")
-    slice(0).repartition(col("k")).write.partitionBy("k").parquet(path)
-    slice(1).write.mode("append").partitionBy("k").parquet(path)
     val tomb = Seq(7, 13, 30).toDF("id") // ids spread across k=1, k=0, k=3
-    val expected = spark.read.parquet(path)
+    val expected = slice(0).union(slice(1))
       .filter(!col("id").isin(7, 13, 30))
       .as[(Int, Int, Int)].collect().sorted.toSeq
-    val sibling = root + "/t2"
+    val sibling = base + "/t2"
     slice(9).write.partitionBy("k").parquet(sibling)
-    val siblingBefore = Files.walk(Paths.get(sibling)).toArray
-      .map(_.toString).sorted.toSeq
-
-    Sinks.compactPartitioned(spark, path, Seq("k"), Some(tomb), Seq("id"))
-
-    def partDirs = Files.list(Paths.get(path)).toArray.map(_.toString)
-      .filter(_.matches(".*/k=\\d+")).sorted
-    def filesIn(d: String) = Files.list(Paths.get(d)).toArray
-      .map(_.toString).count(_.endsWith(".parquet"))
-    assert(partDirs.length === 3, "k=3 (all rows tombstoned) should be gone")
-    partDirs.foreach(d => assert(filesIn(d) === 1, s"$d not compacted"))
-    assert(spark.read.parquet(path)
+    val siblingBefore = walk(sibling)
+    val (v, _) = StoreFs.buildVersion(spark, root) { v =>
+      val frag = s"$v/scratch"
+      slice(0).repartition(col("k")).write.partitionBy("k").parquet(frag)
+      slice(1).write.mode("append").partitionBy("k").parquet(frag)
+      assert(partKeys(frag) === Seq(0, 1, 2, 3))
+      Sinks.writePartitioned(spark,
+        Sinks.antiJoinTombstones(spark.read.parquet(frag), tomb, Seq("id")),
+        s"$v/idx", Seq("k"), "fold")
+    }
+    assert(partKeys(s"$v/idx") === Seq(0, 1, 2),
+      "k=3 (all rows tombstoned) should be gone")
+    partDirs(s"$v/idx").foreach(d =>
+      assert(filesIn(d) === 1, s"$d not compacted"))
+    assert(spark.read.parquet(s"$v/idx").select("k", "id", "v")
       .as[(Int, Int, Int)].collect().sorted.toSeq === expected,
       "fold dropped the wrong rows")
-    assert(Files.walk(Paths.get(sibling)).toArray
-      .map(_.toString).sorted.toSeq === siblingBefore,
-      "sibling table was touched")
+    assert(walk(sibling) === siblingBefore, "sibling table was touched")
   }
 
-  test("rewritePartitioned: commits caller-provided content under a NEW " +
-    "partition keyspace atomically — the directory layout is replaced " +
-    "wholesale, a planted sibling survives, no staging leftovers; the " +
-    "mid-swap crash states match the documented rename-aside contract") {
-    val root = tmpDir("sinks-rw")
-    val path = root + "/t"
+  test("writePartitioned re-bucket: a new partition keyspace is published " +
+    "as a new version while the previous one keeps the old layout; an " +
+    "EMPTY rewrite is refused, publishes nothing and leaves no files; a " +
+    "planted sibling survives") {
+    val base = tmpDir("sinks-rw")
+    val root = base + "/t"
     // old geometry: k ∈ {0,1,2}; new geometry: k ∈ {0..5} — the
-    // keyspace itself changes (the re-bucket shape), which is why the
-    // commit must be the atomic swap, not a per-partition mutation
+    // keyspace itself changes (the re-bucket shape)
     def oldT = (1 to 30).map(n => (n % 3, n)).toDF("k", "v")
     def newT = (1 to 30).map(n => (n % 6, 1000 + n)).toDF("k", "v")
     val newRows = (1 to 30).map(n => (n % 6, 1000 + n)).sorted
-    oldT.repartition(col("k")).write.partitionBy("k").parquet(path)
-    val sibling = root + "/t2"
+    val sibling = base + "/t2"
     oldT.write.partitionBy("k").parquet(sibling)
-    val siblingBefore = Files.walk(Paths.get(sibling)).toArray
-      .map(_.toString).sorted.toSeq
-    def partKeys = Files.list(Paths.get(path)).toArray.map(_.toString)
-      .filter(_.matches(".*/k=\\d+")).map(_.split("k=").last.toInt)
-      .sorted.toSeq
-    assert(partKeys === Seq(0, 1, 2))
-
-    Sinks.rewritePartitioned(spark, path, newT, Seq("k"))
-
-    assert(partKeys === Seq(0, 1, 2, 3, 4, 5),
-      "new keyspace did not replace the old directory layout")
-    assert(spark.read.parquet(path).select("k", "v")
-      .as[(Int, Int)].collect().sorted.toSeq === newRows)
-    assert(Files.walk(Paths.get(sibling)).toArray
-      .map(_.toString).sorted.toSeq === siblingBefore,
-      "sibling table was touched")
-    def stagingDirs = Files.list(Paths.get(root)).toArray.map(_.toString)
-      .filter(_.contains("-staging")).toSeq
-    assert(stagingDirs.isEmpty, s"staging leftovers: $stagingDirs")
-
-    // an EMPTY rewrite is refused before any rename (swapping a
-    // schema-less dir in would brick the store — the compaction
-    // guard's rationale, on the third swap client). The guard runs on
-    // the STAGED content (round-16 advice: guarding the input frame
-    // left a check-to-write race) and cleans its empty staged dir up,
-    // so the refusal leaves neither the table changed nor leftovers.
-    intercept[IllegalArgumentException] {
-      Sinks.rewritePartitioned(spark, path, newT.limit(0), Seq("k"))
-    }
-    assert(spark.read.parquet(path).select("k", "v")
-      .as[(Int, Int)].collect().sorted.toSeq === newRows,
-      "refused empty rewrite must leave the table untouched")
-    assert(stagingDirs.isEmpty,
-      s"refused empty rewrite left staging dirs: $stagingDirs")
-
-    // crash BEFORE rename #0: the serving table is untouched (still the
-    // post-rewrite content) and the staged copy sits aside, complete
-    Sinks.crashBeforeRename = 0
-    try intercept[IllegalStateException] {
-      Sinks.rewritePartitioned(spark, path, oldT, Seq("k"))
-    } finally Sinks.crashBeforeRename = -1
-    assert(spark.read.parquet(path).select("k", "v")
-      .as[(Int, Int)].collect().sorted.toSeq === newRows,
-      "crash before rename #0 must leave the serving table untouched")
-    val stagedAfter0 = stagingDirs.filterNot(_.contains("-staging-old-"))
-    assert(stagedAfter0.nonEmpty, "staged copy missing after crash #0")
-    assert(spark.read.parquet(stagedAfter0.head).select("k", "v")
+    val siblingBefore = walk(sibling)
+    def build(df: org.apache.spark.sql.DataFrame): String =
+      StoreFs.buildVersion(spark, root) { v =>
+        Sinks.writePartitioned(spark, df, s"$v/idx", Seq("k"), "rebucket")
+      }._1
+    def rows(v: String) = spark.read.parquet(s"$v/idx").select("k", "v")
       .as[(Int, Int)].collect().sorted.toSeq
-      === (1 to 30).map(n => (n % 3, n)).sorted,
-      "staged copy incomplete after crash #0")
 
-    // crash BEFORE rename #1 (mid-swap): the table is at the side path
-    // — nothing is lost, recoverable by hand exactly as documented
-    Sinks.crashBeforeRename = 1
-    try intercept[IllegalStateException] {
-      Sinks.rewritePartitioned(spark, path, oldT, Seq("k"))
-    } finally Sinks.crashBeforeRename = -1
-    assert(!Files.exists(Paths.get(path)),
-      "mid-swap the serving path should be vacated")
-    val sides = stagingDirs.filter(_.contains("-staging-old-"))
-    assert(sides.size === 1, s"expected one side copy, got $sides")
-    assert(spark.read.parquet(sides.head).select("k", "v")
-      .as[(Int, Int)].collect().sorted.toSeq === newRows,
-      "side copy lost the pre-swap table")
-    // hand recovery: move the side copy back — the store serves again
-    Files.move(Paths.get(sides.head), Paths.get(path))
-    assert(spark.read.parquet(path).select("k", "v")
-      .as[(Int, Int)].collect().sorted.toSeq === newRows)
-    assert(Files.walk(Paths.get(sibling)).toArray
-      .map(_.toString).sorted.toSeq === siblingBefore,
-      "sibling table was touched by the crash paths")
+    val v1 = build(oldT)
+    assert(partKeys(s"$v1/idx") === Seq(0, 1, 2))
+    val v2 = build(newT)
+    assert(StoreFs.currentVersion(root) === v2)
+    assert(partKeys(s"$v2/idx") === Seq(0, 1, 2, 3, 4, 5),
+      "new keyspace did not replace the old directory layout")
+    assert(rows(v2) === newRows)
+    // a reader of the previous version still sees the old geometry
+    assert(partKeys(s"$v1/idx") === Seq(0, 1, 2))
+
+    // an EMPTY rewrite is refused (a schema-less dir would brick the
+    // store): the guard runs on the written output, deletes it, and
+    // fails the build, so nothing is published
+    intercept[IllegalArgumentException](build(newT.limit(0)))
+    assert(StoreFs.currentVersion(root) === v2,
+      "refused empty rewrite must not publish")
+    assert(rows(v2) === newRows,
+      "refused empty rewrite must leave the store untouched")
+    val stray = Files.walk(Paths.get(root)).toArray.map(_.toString)
+      .filter(f => Files.isRegularFile(Paths.get(f)))
+      .filterNot(f => f.startsWith(v1 + "/") || f.startsWith(v2 + "/"))
+    assert(stray.isEmpty, s"refused rewrite left files: ${stray.toSeq}")
+    assert(walk(sibling) === siblingBefore, "sibling table was touched")
   }
 }
