@@ -30,8 +30,9 @@ object Sessions {
               shufflePartitions: String = cpus): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
-      // graft's SQL functions + the size(array_intersect(sorted distinct))
-      // → merge-count optimizer rule (plans.GraftExtensions / Rules.scala)
+      // graft's SQL functions, the size(array_intersect(sorted distinct))
+      // → merge-count optimizer rule and the small-sort single-partition
+      // AQE rule (plans.GraftExtensions / Rules.scala)
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")

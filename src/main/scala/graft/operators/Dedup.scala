@@ -887,8 +887,10 @@ object Dedup {
     // orderBy HERE, not in the shared probe body: this is the only
     // consumer whose returned frame IS the gated output (r20 measure:
     // every streaming consumer re-sorts after its sink union, so a sort
-    // inside the probe body paid a range-sample + sort per micro-batch
-    // for row order the sink write immediately discarded).
+    // inside the probe body paid a shuffle + global sort per micro-batch
+    // for row order the sink write immediately discarded; a large probe
+    // output also paid a range-sample job, which a small one skips
+    // under plans.SmallSortSinglePartition).
     d11ProbeFrames(s, dir,
       banded(s, dir).filter(isBatch),
       t(s, dir, "documents").filter(isBatch).select("doc_id"))
@@ -942,8 +944,9 @@ object Dedup {
     // NO final orderBy here (r20): per-doc verdicts are row-complete as
     // computed; the one-shot d11 gate sorts at its own seam, and every
     // streaming consumer (d12/d13 sink unions, the d16/d17/d18 tick
-    // outputs) re-sorts after union — the sort here cost one range
-    // sample + global sort PER MICRO-BATCH, discarded by the sink write.
+    // outputs) re-sorts after union — the sort here cost one shuffle +
+    // global sort PER MICRO-BATCH (and a range sample above the
+    // one-partition size), discarded by the sink write.
   }
 
   /** D12: STREAMING INGEST GATE — the d11 screen as it actually runs in

@@ -778,14 +778,18 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
     * review): per-qid |approx ∩ exact| via a left-semi join on
     * `keyCols`, 0-filled over exact's query set, recall = n_hits/k
     * rounded 6dp. Both frames must be unique on keyCols (rank lists
-    * are), so the semi-join count IS the intersection size. */
+    * are), so the semi-join count IS the intersection size. Both joins
+    * broadcast their batch×k-sized right side by hint: left to AQE, the
+    * strategy depended on which input stage finished first, so a warm
+    * call could plan a join another way and compile new code. */
   private[operators] def recallPerQid(approx: DataFrame, exact: DataFrame,
                            keyCols: Seq[String], k: Int): DataFrame = {
     val hits = approx.select(keyCols.map(col): _*)
-      .join(exact.select(keyCols.map(col): _*), keyCols, "left_semi")
+      .join(broadcast(exact.select(keyCols.map(col): _*)), keyCols,
+        "left_semi")
       .groupBy("qid").agg(count(lit(1)).as("n_hits"))
     exact.select("qid").distinct()
-      .join(hits, Seq("qid"), "left")
+      .join(broadcast(hits), Seq("qid"), "left")
       .select(col("qid"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
       .withColumn("recall", round(col("n_hits").cast("double") / k, 6))
   }

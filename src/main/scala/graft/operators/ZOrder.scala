@@ -416,8 +416,10 @@ object ZOrder {
     *     CANNOT be quantized (the integer cell rule would map it
     *     outside the grid) — that is the re-cluster trigger: rebuild
     *     the layout over base ∪ arrivals under widened bounds as a
-    *     NEW published version (readers on the old version stay safe
-    *     under the retention window; the O(1) arrival min/max
+    *     NEW published version of the `<tag>-fold` root, so each root
+    *     still builds one version per call and the base version this
+    *     call returned before stays inside the {current, previous}
+    *     retention window of the next call (the O(1) arrival min/max
     *     pre-flight is the trigger readout, the prof8 pattern).
     *  4. FOLD (maintenance cadence): base ∪ delta rewritten in the
     *     batch=-1 base layout ([[graft.sources.Sinks.writePartitioned]])
@@ -429,11 +431,11 @@ object ZOrder {
   private[operators] def z3TickFold(s: SparkSession, dir: String,
       tag: String, base: DataFrame, arrivals: DataFrame,
       afterStage: (String, String) => Unit = (_, _) => ()): String = {
-    def build(rows: DataFrame): String = Similarity.idxOf(
-      graft.core.StoreFs.buildVersion(s, Similarity.storeRoot(s, dir, tag)) {
+    def build(root: String, rows: DataFrame): String = Similarity.idxOf(
+      graft.core.StoreFs.buildVersion(s, Similarity.storeRoot(s, dir, root)) {
         v => writeZ3Layout(s, Similarity.idxOf(v), rows)
       }._1)
-    val store = build(base)
+    val store = build(tag, base)
     afterStage("build", store)
     val (minU, maxU, minD, maxD) = readBounds(s, store)
     val aRow = arrivals.agg(min("user_id").as("alo"), max("user_id").as("ahi"),
@@ -441,7 +443,7 @@ object ZOrder {
     if (aRow.isNullAt(aRow.fieldIndex("alo"))) store // empty arrival slice
     else if (aRow.getAs[Long]("alo") < minU || aRow.getAs[Long]("ahi") > maxU ||
       aRow.getAs[Long]("dlo") < minD || aRow.getAs[Long]("dhi") > maxD) {
-      val widened = build(base.unionByName(arrivals))
+      val widened = build(s"$tag-fold", base.unionByName(arrivals))
       afterStage("requantize", widened)
       widened
     } else {

@@ -24,6 +24,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // size(array_intersect(sorted distinct, sorted distinct)) →
     // zero-allocation merge count (see Rules.scala).
     ext.injectOptimizerRule(_ => IntersectCountRewrite)
+    // a global sort of a small input shuffles into one partition
+    // instead of sampling range bounds (see Rules.scala)
+    ext.injectQueryStagePrepRule(SmallSortSinglePartition)
   }
 }
 

@@ -7,14 +7,16 @@ import graft.SparkSpec
   * generated class. That needs a cache sized to the engine's plan
   * working set (`Sessions.builder`) and one class loader for the tasks
   * of every session, including the micro-batch tasks of a stream whose
-  * session is cloned per start (d12, `Streams.withStatePartitions`). */
+  * session is cloned per start (d12, `Streams.withStatePartitions`),
+  * and plans whose join strategies do not depend on which AQE stage
+  * finishes first (s32's recall joins broadcast by hint). */
 class CodegenCacheSpec extends SparkSpec {
 
   /** The committed sf0.001 tables (run from the repository root). */
   private val dir = "perfbench/data/sf0.001"
 
   private val ops = Seq("a13_scalar_reduce", "j3_mixed_type_join",
-    "e4_daily_pivot", "d12_stream_ingest_gate")
+    "e4_daily_pivot", "d12_stream_ingest_gate", "s32_post_event_recall")
 
   private def run(op: String): Long =
     graft.SparkEntry.queries(op)(spark, dir).queryExecution.toRdd.count()
