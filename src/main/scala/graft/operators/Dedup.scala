@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Registry
 import graft.core.Tables.t
 import graft.functions.Portable
 import graft.functions.Portable.{h60pSql, P}
@@ -69,31 +70,6 @@ object Dedup {
           Portable.shingleHashes(col("th"), sA, sB, sC))
           .otherwise(array(Portable.h60(norm(col("text"))) % P)))
 
-  /** The shingle stage (one md5 pass per token) MATERIALIZED once per
-    * (session, dir) and shared by d2/d3/d5 — each of those plans
-    * references the shingle set 2-3 times, and without materialization
-    * Catalyst re-executes the scan + hash pass per reference. At 100 TB
-    * this is a silver table you'd write once per corpus snapshot; in a
-    * session it's a persisted frame (same lifecycle contract as
-    * queries.MlQueries's model/ABT registry: testdata dirs are
-    * immutable, entries live for the process).
-    *
-    * Besides raw `hs`, it carries `sh`: the doc's distinct shingles in
-    * RAREST-FIRST global order (ascending corpus document-frequency, the
-    * canonical AllPairs prefix ordering — prefixes then hit rare
-    * shingles, collapsing hot-shingle pair fan-out). Each element is the
-    * shingle's (df, hash) PACKED into one long (df·2³¹ + hash; hash < P
-    * < 2³¹, so unique per shingle and value-order == (df, hash)-order —
-    * valid while df < 2³², i.e. corpora under ~4B docs). The packing
-    * keeps a consistent total order AND value-sorted arrays for the
-    * zero-allocation merge intersect, with no global rank window.
-    *
-    * Lifecycle: [[graft.core.Registry]] — content-fingerprinted keys
-    * (an in-place regeneration never serves a stale frame) AND
-    * eviction+unpersist of the superseded generation on miss. */
-  private val shingledReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   /** The shingle-stage BUILD over any (doc_id, text) frame — the
     * un-persisted computation behind [[shingled]], factored out so
     * planted-corpus specs (d14's boilerplate test) can run the
@@ -111,13 +87,24 @@ object Dedup {
       .withColumn("n", size(col("sh")))
   }
 
+  /** The shingle stage (one md5 pass per token), shared by d2/d3/d5:
+    * each of those plans references the shingle set 2-3 times, and
+    * without materialization Catalyst re-executes the scan + hash pass
+    * per reference. At 100 TB this is a silver table written once per
+    * corpus snapshot.
+    *
+    * Besides raw `hs`, it carries `sh`: the doc's distinct shingles in
+    * RAREST-FIRST global order (ascending corpus document-frequency, the
+    * canonical AllPairs prefix ordering — prefixes then hit rare
+    * shingles, collapsing hot-shingle pair fan-out). Each element is the
+    * shingle's (df, hash) PACKED into one long (df·2³¹ + hash; hash < P
+    * < 2³¹, so unique per shingle and value-order == (df, hash)-order —
+    * valid while df < 2³², i.e. corpora under ~4B docs). The packing
+    * keeps a consistent total order AND value-sorted arrays for the
+    * zero-allocation merge intersect, with no global rank window. */
   private[operators] def shingled(s: SparkSession, dir: String): DataFrame =
-    shingledReg.getOrCompute(s, dir) {
-      val df = buildShingleStage(t(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    Registry.frame("shingled", s, dir)(
+      buildShingleStage(t(s, dir, "documents")))
 
   /** Stage the native batched MinHash signature (plans.MinHashSig: one
     * pass over hs for all 12 perms) as `sig`, then cheap extractions —
@@ -166,29 +153,21 @@ object Dedup {
     * replicates every row ×4 onto join sides, so any payload here
     * multiplies shuffle bytes by ~8× the corpus volume (PlanSpec asserts
     * no array-typed attribute crosses an Exchange). At 100 TB this is
-    * the corpus's persisted LSH INDEX, bucketed by (band, bh) —
-    * MATERIALIZED here too ([[Registry]], like [[shingled]]): its
+    * the corpus's persisted LSH INDEX, bucketed by (band, bh): its
     * consumers reference it twice per plan (d3's self-join sides, d11's
     * index + probe split), and without persistence each reference
-    * re-pays the 12-perm signature + band md5 over the whole corpus —
-    * the fixed overhead that held d11 at ~2.6× its gate in BENCH_r09.
+    * re-pays the 12-perm signature + band md5 over the whole corpus.
     * Scalar-only rows make it ~4 rows × 3 longs per doc — far smaller
     * than the shingle stage it derives from. */
-  private val bandedReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   private[graft] def banded(s: SparkSession, dir: String): DataFrame =
-    bandedReg.getOrCompute(s, dir) {
+    Registry.frame("banded", s, dir) {
       val sig = withSig(shingled(s, dir)).select(col("doc_id") +: minhashCols: _*)
-      val df = sig.select(col("doc_id"),
+      sig.select(col("doc_id"),
         explode(array((0 until 4).map(b =>
           struct(lit(b).as("band"),
             md5(concat_ws(",", col(s"mh${3 * b}"), col(s"mh${3 * b + 1}"),
               col(s"mh${3 * b + 2}"))).as("bh"))): _*)).as("bb"))
         .select(col("doc_id"), col("bb.band"), col("bb.bh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** D3 candidate generation — self-join the banded index on
@@ -472,21 +451,12 @@ object Dedup {
     out
   }
 
-  /** Cluster-assignment "silver table": d7's output persisted once per
-    * (session, dir) — the lifecycle contract of the shingle stage above.
-    * In production the CC labels are written once per dedup run and read
-    * by every downstream keep/drop decision; here d7 (the gated CC
-    * computation) and d8 (the keep rule) share the persisted frame. */
-  private val clustersReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+  /** Cluster-assignment silver table: d7's output. In production the CC
+    * labels are written once per dedup run and read by every downstream
+    * keep/drop decision; here d7 (the gated CC computation) and d8 (the
+    * keep rule) share it. */
   private def clusters(s: SparkSession, dir: String): DataFrame =
-    clustersReg.getOrCompute(s, dir) {
-      val df = d7DedupClusters(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    Registry.frame("clusters", s, dir)(d7DedupClusters(s, dir))
 
   /** D8: the KEEP RULE — the decision stage after cluster formation that
     * an actual dedup pipeline ships: per cluster, keep the member with
@@ -1024,47 +994,29 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Base-side (pre-tick) index artifacts of the d16 tick: the dense
-    * retrieval index and the raw sparse postings over the NON-arriving
-    * doc slice — what a serving deployment holds when the micro-batch
-    * lands. The d11 slice (not s15's): the ONE arriving batch feeds
-    * verdict, tag, and both folds, so the tick tells one consistent
-    * story. Registry-persisted like Similarity's base artifacts. */
-  private val d16DenseReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-  private val d16SparseReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
-  /** The persist registry discipline in one place (the
-    * baseRetrievalIndex pattern, locally shared by both d16 base
-    * artifacts so a lifecycle change lands once). Deliberately NO
-    * eager count(): the GATED tick only touches these frames'
-    * schema (column projection + the empty-arrival fallback) — its
-    * readbacks come from the batch-sized delta area — so the base
-    * corpus encode must not run on the gated path at all; the persist
-    * materializes at first real action (the spec's refreshed-index
-    * legs), review-pass finding. */
-  private def persistedBase(reg: graft.core.Registry[DataFrame],
-                            s: SparkSession, dir: String)
-                           (build: => DataFrame): DataFrame =
-    reg.getOrCompute(s, dir) {
-      build
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-
   /** The d16 base-slice chunk corpus (non-arriving docs). */
   private def d16BaseChunks(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.queries("c3_chunk_corpus")(s, dir)
       .filter(pmod(col("doc_id"), lit(d11Mod)) =!= lit(d11Res))
 
+  /** Base-side (pre-tick) index artifacts of the d16 tick: the dense
+    * retrieval index and the raw sparse postings over the NON-arriving
+    * doc slice — what a serving deployment holds when the micro-batch
+    * lands. The d11 slice (not s15's): the ONE arriving batch feeds
+    * verdict, tag, and both folds, so the tick tells one consistent
+    * story. Both are LAZY: the gated tick only touches their schema
+    * (column projection + the empty-arrival fallback), its read-backs
+    * come from the batch-sized delta area, so the base corpus encode
+    * must not run on the gated path; the spec's refreshed-index legs
+    * are the first real action. */
   private[operators] def d16BaseDense(s: SparkSession,
                                       dir: String): DataFrame =
-    persistedBase(d16DenseReg, s, dir)(
+    Registry.lazyFrame("d16BaseDense", s, dir)(
       Similarity.encodeChunks(d16BaseChunks(s, dir)))
 
   private[operators] def d16BasePostings(s: SparkSession,
                                          dir: String): DataFrame =
-    persistedBase(d16SparseReg, s, dir)(
+    Registry.lazyFrame("d16BasePostings", s, dir)(
       Similarity.rawPostings(d16BaseChunks(s, dir)
         .select(col("doc_id"), col("chunk_idx"), col("chunk_text"))))
 

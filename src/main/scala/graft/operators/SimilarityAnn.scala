@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Registry
 import graft.core.Tables.t
 import graft.functions.Portable
 
@@ -175,17 +176,6 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
         col("best").getField("d").as("pd"))
   }
 
-  /** FINAL k-means centroids per (session, dir) — the per-corpus
-    * clustering ARTIFACT (cell, vec, n2; k rows): trained once by the
-    * full Lloyd loop, persisted, and PROBED by every consumer (s7's
-    * gated assignment, s8's within-cluster prune, d13's streaming
-    * cluster tag) — the d3/d11 persisted-LSH-index lifecycle applied to
-    * centroids. Production writes this k-row table next to the corpus
-    * snapshot; a session holds it in the [[graft.core.Registry]] with
-    * content-fingerprint eviction. */
-  private[operators] val centroidReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   /** The full Lloyd loop over a (vec_id, embedding) frame with the
     * init centroids = the rows whose vec_id is in `initIds` (cell
     * label = that vec_id) — factored from the full-corpus artifact so
@@ -222,37 +212,32 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
     cent
   }
 
+  /** FINAL k-means centroids — the per-corpus clustering ARTIFACT
+    * (cell, vec, n2; k rows): trained once by the full Lloyd loop and
+    * PROBED by every consumer (s7's gated assignment, s8's
+    * within-cluster prune, d13's streaming cluster tag). Production
+    * writes this k-row table next to the corpus snapshot. */
   private[operators] def kmeansCentroids(s: SparkSession,
                                          dir: String): DataFrame =
-    centroidReg.getOrCompute(s, dir) {
+    Registry.frame("kmeansCentroids", s, dir) {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val df = lloyd(e, 0L until kmeansK.toLong)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
+      lloyd(e, 0L until kmeansK.toLong)
     }
 
   /** Per-corpus CLUSTER-ASSIGNMENT frame (vec_id, embedding, nrm,
-    * cluster, pd) — the second persisted clustering artifact: where
-    * [[kmeansCentroids]] is the k-row model, this is the per-vector
-    * assignment TABLE a production run writes next to the corpus (the
-    * SemDeDup layout stores both). Persisted because its consumers
+    * cluster, pd): where [[kmeansCentroids]] is the k-row model, this
+    * is the per-vector assignment TABLE a production run writes next to
+    * the corpus (the SemDeDup layout stores both). Its consumers
     * reference it several times per plan (s8's two pair-join sides +
-    * verdict frame, s9's profile, s8Banded's four references) — an
-    * un-persisted frame re-runs the corpus scan + argmin per
-    * reference (round-11 review). */
-  private[operators] val assignedReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+    * verdict frame, s9's profile, s8Banded's four references); an
+    * un-persisted frame would re-run the corpus scan + argmin per
+    * reference. */
   private[operators] def kmeansAssigned(s: SparkSession,
                                         dir: String): DataFrame =
-    assignedReg.getOrCompute(s, dir) {
+    Registry.frame("kmeansAssigned", s, dir) {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val df = kmeansAssign(e, kmeansCentroids(s, dir))
+      kmeansAssign(e, kmeansCentroids(s, dir))
         .withColumn("nrm", normD(col("embedding")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   val s7Kmeans: Q = (s, dir) =>
@@ -538,26 +523,18 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
   private[operators] def pqSub(m: Int, emb: Column = col("embedding")): Column =
     slice(emb, m * pqSubDims + 1, pqSubDims)
 
-  /** Per-corpus PQ CODEBOOKS (m, cell, vec, n2; M·K rows) — the third
-    * persisted clustering artifact: one [[lloyd]] codebook per
-    * subspace, trained on the corpus subvectors ([[kmeansCentroids]]'
-    * lifecycle: computed once per (session, dir), probed by the encode
-    * pass and every query batch). */
-  private[operators] val pqBookReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+  /** Per-corpus PQ CODEBOOKS (m, cell, vec, n2; M·K rows): one
+    * [[lloyd]] codebook per subspace, trained on the corpus subvectors
+    * and probed by the encode pass and every query batch. */
   private[operators] def pqCodebooks(s: SparkSession,
                                      dir: String): DataFrame =
-    pqBookReg.getOrCompute(s, dir) {
+    Registry.frame("pqCodebooks", s, dir) {
       val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val df = (0 until pqM).map { m =>
+      (0 until pqM).map { m =>
         lloyd(e.select(col("vec_id"), pqSub(m).as("embedding")),
           0L until pqK.toLong)
           .select(lit(m).as("m"), col("cell"), col("vec"), col("n2"))
       }.reduce(_ union _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** Per-corpus PQ CODES (vec_id, embedding, nrm, codes; codes =
@@ -568,11 +545,8 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
     * collapses to one broadcast row and the per-vector argmin is the
     * [[kmeansAssign]] array_min form — chained over subspaces, never
     * a shuffle of the corpus. */
-  private[operators] val pqCodeReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   private[operators] def pqCodes(s: SparkSession, dir: String): DataFrame =
-    pqCodeReg.getOrCompute(s, dir) {
+    Registry.frame("pqCodes", s, dir) {
       val cb = pqCodebooks(s, dir)
       var enc = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       (0 until pqM).foreach { m =>
@@ -587,12 +561,9 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
               c.getField("cell").as("cell")))).getField("cell"))
           .drop(s"cs$m")
       }
-      val df = enc.select(col("vec_id"), col("embedding"),
+      enc.select(col("vec_id"), col("embedding"),
         normD(col("embedding")).as("nrm"),
         array((0 until pqM).map(m => col(s"code$m")): _*).as("codes"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** S12: PRODUCT-QUANTIZATION ANN with ADC (asymmetric distance
@@ -673,24 +644,17 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
 
   /** Combined IVF-PQ INDEX artifact (vec_id, embedding, nrm, codes,
     * cluster) — the single table a FAISS-style deployment ships: the
-    * coarse cell from the persisted k-means assignment
-    * ([[kmeansAssigned]]) and the PQ codes from the persisted encode
-    * ([[pqCodes]]), joined ONCE per corpus snapshot and persisted.
+    * coarse cell from the k-means assignment ([[kmeansAssigned]]) and
+    * the PQ codes ([[pqCodes]]), joined ONCE per corpus snapshot.
     * Production writes exactly this layout (cluster-partitioned code
     * lists); re-deriving it per query batch would pay the vec_id join
     * every time. */
-  private[operators] val ivfpqReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   private[operators] def ivfpqIndex(s: SparkSession,
                                     dir: String): DataFrame =
-    ivfpqReg.getOrCompute(s, dir) {
-      val df = pqCodes(s, dir)
+    Registry.frame("ivfpqIndex", s, dir) {
+      pqCodes(s, dir)
         .join(kmeansAssigned(s, dir).select("vec_id", "cluster"),
           Seq("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** S13: IVF-PQ ANN — the two compression layers composed into the
@@ -901,21 +865,15 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
       .take(kmeansK).toSeq
 
   /** Centroids trained on the BASE corpus only (the model d13-style
-    * serving would hold BEFORE the batch arrives) — same Lloyd loop,
-    * persisted per (session, dir) like [[kmeansCentroids]]. */
-  private[operators] val baseCentroidReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+    * serving would hold BEFORE the batch arrives) — same Lloyd loop as
+    * [[kmeansCentroids]]. */
   private[operators] def baseCentroids(s: SparkSession,
                                        dir: String): DataFrame =
-    baseCentroidReg.getOrCompute(s, dir) {
+    Registry.frame("baseCentroids", s, dir) {
       val base = t(s, dir, "embeddings")
         .filter(pmod(col("vec_id"), lit(s11Mod)) =!= lit(s11Res))
         .select(col("vec_id"), col("embedding"))
-      val df = lloyd(base, s11InitIds)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
+      lloyd(base, s11InitIds)
     }
 
   /** MINI-BATCH CENTROID UPDATE core — the online k-means rule

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Registry
 import graft.core.Tables.t
 import graft.functions.Portable
 
@@ -36,19 +37,6 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
   private[operators] def embedTokens(tokens: Column): Column =
     Portable.hashEmbed(Portable.h60Array(tokens, modP = true), dims)
 
-  /** The RETRIEVAL INDEX artifact over the c3 chunk corpus: each chunk
-    * embedded, normed, and LSH-bucketed under the committed plane
-    * geometry, persisted per (session, dir) with the [[graft.core
-    * .Registry]] lifecycle every silver stage here follows. This is
-    * the table a production retrieval deployment WRITES once per
-    * corpus snapshot (bucketed/partitioned by `bkt`) and serves every
-    * query batch from — the read-side counterpart of c3's build side.
-    * Zero-norm chunks (a hash-embedding artifact of token-sign
-    * cancellation; measure-zero in practice) are excluded at build
-    * time in both engines — they cannot be cosine-ranked. */
-  private[operators] val retrievalReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   /** The index ENCODE step — embed, norm-filter, bucket, project — as
     * a per-chunk map over any chunk frame. Factored out so the
     * incremental refresh (s15) encodes ONLY the arriving batch: unlike
@@ -66,14 +54,18 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
         col("quality_score"), col("chunk_text"), col("ce"), col("cn"),
         col("bkt"))
 
+  /** The RETRIEVAL INDEX artifact over the c3 chunk corpus: each chunk
+    * embedded, normed, and LSH-bucketed under the committed plane
+    * geometry. This is the table a production retrieval deployment
+    * WRITES once per corpus snapshot (bucketed/partitioned by `bkt`)
+    * and serves every query batch from — the read-side counterpart of
+    * c3's build side. Zero-norm chunks (a hash-embedding artifact of
+    * token-sign cancellation; measure-zero in practice) are excluded at
+    * build time in both engines — they cannot be cosine-ranked. */
   private[operators] def retrievalIndex(s: SparkSession,
                                         dir: String): DataFrame =
-    retrievalReg.getOrCompute(s, dir) {
-      val df = encodeChunks(TextAnalysis.queries("c3_chunk_corpus")(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    Registry.frame("retrievalIndex", s, dir)(
+      encodeChunks(TextAnalysis.queries("c3_chunk_corpus")(s, dir)))
 
   /** Corpus-prefix query-embedding frame over an arbitrary doc window
     * (first [[s10QueryTokens]] whitespace tokens of each query doc
@@ -262,20 +254,13 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * re-encode of the corpus with one more sign plane. Embeddings and
     * norms are unchanged (the embedder is geometry-independent); only
     * the bucket key is recomputed, so the rebuild is the same map-only
-    * encode pass as the original build. Persisted per (session, dir);
-    * the GATE writes it into a fresh store version (see
-    * [[s26RebucketRebuild]]) — this frame is the committed content
-    * and the spec's ground truth for the store. */
-  private[operators] val rebucketReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+    * encode pass as the original build. The GATE writes it into a
+    * fresh store version (see [[s26RebucketRebuild]]) — this frame is
+    * the committed content and the spec's ground truth for the store. */
   private[graft] def rebucketIndex(s: SparkSession, dir: String): DataFrame =
-    rebucketReg.getOrCompute(s, dir) {
-      val df = encodeChunks(
+    Registry.frame("rebucketIndex", s, dir) {
+      encodeChunks(
         TextAnalysis.queries("c3_chunk_corpus")(s, dir), s26Planes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** S26: RE-BUCKET REBUILD — the ACTION leg of prof8's re-bucket
@@ -317,28 +302,23 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
   // s23: learned embedder behind the SAME serving stack
   // ------------------------------------------------------------------ //
 
-  /** The TRAINED embedder at the [[embedTokens]] swap point (round-13
-    * verdict item 1): a seeded MLlib Word2Vec fit on the c3 chunk
-    * corpus — the production move every retrieval deployment makes
-    * when the hashing-trick stand-in is replaced by a learned model.
-    * Fit once per (session, dir) via the registry; determinism is
-    * pinned the m3/m7 way: the training sentences are repartition(1) +
-    * in-partition (doc_id, chunk_idx) sorted + persisted before the
-    * fit, and the fit runs single-partition with a fixed seed, so
-    * vocabulary order and the SGD stream are content-deterministic and
-    * the fitted vectors (and the s23 golden top-k) reproduce across
+  /** The raw fit of the TRAINED embedder at the [[embedTokens]] swap
+    * point: a seeded MLlib Word2Vec fit on the c3 chunk corpus — the
+    * production move every retrieval deployment makes when the
+    * hashing-trick stand-in is replaced by a learned model. Exposed
+    * (bypassing the registry) so the spec can pin in-session refit
+    * determinism: two fits over the same content must produce identical
+    * vectors. Determinism is pinned the m3/m7 way: the training
+    * sentences are repartition(1) + in-partition (doc_id, chunk_idx)
+    * sorted + persisted before the fit, and the fit runs
+    * single-partition with a fixed seed, so vocabulary order and the
+    * SGD stream are content-deterministic and the fitted vectors (and the s23 golden top-k) reproduce across
     * hosts and input layouts. The m7 BLAS caveat applies identically
     * (MLlib's axpy rides netlib; a native-BLAS host could drift a low
     * bit — the spec pins in-session refit equality so such a failure
     * is diagnosable as fit nondeterminism, not serving plumbing).
     * minCount 2 (not the default 5): the sf0.001 corpus is small and a
     * tiny vocabulary would zero out most chunk embeddings. */
-  private[operators] val w2vReg =
-    new graft.core.Registry[org.apache.spark.ml.feature.Word2VecModel](_ => ())
-
-  /** The raw fit — exposed (bypassing the registry cache) so the spec
-    * can pin in-session refit determinism: two fits over the same
-    * content must produce identical vectors. */
   private[graft] def fitLearnedEmbedder(
       s: SparkSession, dir: String): org.apache.spark.ml.feature.Word2VecModel = {
     val sents = TextAnalysis.queries("c3_chunk_corpus")(s, dir)
@@ -358,23 +338,20 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
 
   private[operators] def learnedEmbedder(
       s: SparkSession, dir: String): org.apache.spark.ml.feature.Word2VecModel =
-    w2vReg.getOrCompute(s, dir)(fitLearnedEmbedder(s, dir))
+    Registry.value[org.apache.spark.ml.feature.Word2VecModel](
+      "learnedEmbedder", s, dir)(fitLearnedEmbedder(s, dir))
 
   /** The learned-metric RETRIEVAL INDEX — [[encodeChunks]]'s exact
     * shape (embed → norm-filter → bucket under the committed plane
-    * geometry) with the Word2Vec transform in the embedder slot,
-    * persisted per (session, dir). Everything downstream — the bucket
-    * probe, [[retrieveTopK]], provenance — is UNTOUCHED: the point of
-    * the gate is that the serving stack is embedder-agnostic in code,
-    * not prose. Zero-norm chunks (every token OOV) are excluded at
+    * geometry) with the Word2Vec transform in the embedder slot.
+    * Everything downstream — the bucket probe, [[retrieveTopK]],
+    * provenance — is UNTOUCHED: the point of the gate is that the
+    * serving stack is embedder-agnostic in code, not prose. Zero-norm chunks (every token OOV) are excluded at
     * build time like the hash path's sign-cancelled ones. */
-  private[operators] val learnedIdxReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   private[graft] def learnedIndex(s: SparkSession, dir: String): DataFrame =
-    learnedIdxReg.getOrCompute(s, dir) {
+    Registry.frame("learnedIndex", s, dir) {
       val m = learnedEmbedder(s, dir)
-      val df = m.transform(
+      m.transform(
           TextAnalysis.queries("c3_chunk_corpus")(s, dir)
             .withColumn("toks", split(col("chunk_text"), " ")))
         .withColumn("ce",
@@ -385,9 +362,6 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
         .select(col("doc_id"), col("chunk_idx"), col("source"),
           col("quality_score"), col("chunk_text"), col("ce"), col("cn"),
           col("bkt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** The s10 query window through the LEARNED embedder — same
@@ -685,20 +659,13 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
   private[operators] val s15Res = 2L
 
   /** Retrieval index over the BASE doc slice only — the artifact a
-    * serving deployment holds BEFORE the batch lands; persisted per
-    * (session, dir) with the [[retrievalIndex]] lifecycle. */
-  private[operators] val baseIdxReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+    * serving deployment holds BEFORE the batch lands. */
   private[operators] def baseRetrievalIndex(s: SparkSession,
                                             dir: String): DataFrame =
-    baseIdxReg.getOrCompute(s, dir) {
-      val df = encodeChunks(
+    Registry.frame("baseRetrievalIndex", s, dir) {
+      encodeChunks(
         TextAnalysis.queries("c3_chunk_corpus")(s, dir)
           .filter(pmod(col("doc_id"), lit(s15Mod)) =!= lit(s15Res)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** The ARRIVING BATCH's chunks through the encode, LAZY by measured

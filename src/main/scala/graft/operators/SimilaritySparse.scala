@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Registry
 import graft.core.Tables.t
 import graft.functions.Portable
 
@@ -112,52 +113,32 @@ private[operators] trait SimilaritySparse { this: Similarity.type =>
       .orderBy("qid", "rk")
   }
 
-  /** Raw-postings artifact over the FULL chunk corpus — persisted per
-    * (session, dir); the inverted index s17 serves from and the
-    * rebuild-equivalence target of the s18 fold. */
-  private[operators] val rawPostReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+  /** Raw-postings artifact over the FULL chunk corpus: the inverted
+    * index s17 serves from and the rebuild-equivalence target of the
+    * s18 fold. */
   private[operators] def rawPostingsFull(s: SparkSession,
                                          dir: String): DataFrame =
-    rawPostReg.getOrCompute(s, dir) {
-      val df = rawPostings(TextAnalysis.queries("c3_chunk_corpus")(s, dir)
+    Registry.frame("rawPostingsFull", s, dir) {
+      rawPostings(TextAnalysis.queries("c3_chunk_corpus")(s, dir)
         .select(col("doc_id"), col("chunk_idx"), col("chunk_text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
-  /** Full-corpus (token, df) stats artifact — persisted: the vocab-
-    * bounded counter frame is computed ONCE per corpus snapshot; a
-    * serving call must never re-shuffle the whole postings artifact
-    * for statistics it can read off a counter table. */
-  private[operators] val fullStatsReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+  /** Full-corpus (token, df) stats artifact: the vocab-bounded counter
+    * frame is computed ONCE per corpus snapshot; a serving call must
+    * never re-shuffle the whole postings artifact for statistics it can
+    * read off a counter table. */
   private[operators] def fullTokenStats(s: SparkSession,
                                         dir: String): DataFrame =
-    fullStatsReg.getOrCompute(s, dir) {
-      val df = tokenStats(rawPostingsFull(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    Registry.frame("fullTokenStats", s, dir)(
+      tokenStats(rawPostingsFull(s, dir)))
 
-  /** Full-corpus one-row (n_chunks, len_sum) counters — persisted for
+  /** Full-corpus one-row (n_chunks, len_sum) counters, an artifact for
     * the same reason as [[fullTokenStats]] (the distinct over the full
     * postings artifact is a corpus-sized shuffle). */
-  private[operators] val fullCountsReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   private[operators] def fullCorpusCounts(s: SparkSession,
                                           dir: String): DataFrame =
-    fullCountsReg.getOrCompute(s, dir) {
-      val df = corpusCounts(rawPostingsFull(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    Registry.frame("fullCorpusCounts", s, dir)(
+      corpusCounts(rawPostingsFull(s, dir)))
 
   /** S17: BM25 SPARSE RANKING — the production-grade sparse leg
     * (Robertson's Okapi BM25 with k1/b defaults) over the raw postings
@@ -185,48 +166,28 @@ private[operators] trait SimilaritySparse { this: Similarity.type =>
     * batch lands) — the s15 base-index pattern on the sparse side;
     * same [[s15Mod]]/[[s15Res]] doc split, so dense and sparse
     * maintenance tell one consistent arriving-batch story. */
-  private[operators] val basePostReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   private[operators] def basePostings(s: SparkSession,
                                       dir: String): DataFrame =
-    basePostReg.getOrCompute(s, dir) {
-      val df = rawPostings(TextAnalysis.queries("c3_chunk_corpus")(s, dir)
+    Registry.frame("basePostings", s, dir) {
+      rawPostings(TextAnalysis.queries("c3_chunk_corpus")(s, dir)
         .filter(pmod(col("doc_id"), lit(s15Mod)) =!= lit(s15Res))
         .select(col("doc_id"), col("chunk_idx"), col("chunk_text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
-  /** Base-side (token, df) stats artifact — persisted WITH the base
-    * postings (a production index ships its counter table); the
-    * refresh merges against this, never re-scanning the base corpus. */
-  private[operators] val baseStatsReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+  /** Base-side (token, df) stats artifact, kept WITH the base postings
+    * (a production index ships its counter table); the refresh merges
+    * against this, never re-scanning the base corpus. */
   private[operators] def baseTokenStats(s: SparkSession,
                                         dir: String): DataFrame =
-    baseStatsReg.getOrCompute(s, dir) {
-      val df = tokenStats(basePostings(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    Registry.frame("baseTokenStats", s, dir)(
+      tokenStats(basePostings(s, dir)))
 
-  /** Base-side one-row (n_chunks, len_sum) counters — persisted with
-    * the base index for the same no-rescan reason. */
-  private[operators] val baseCountsReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+  /** Base-side one-row (n_chunks, len_sum) counters, kept with the
+    * base index for the same no-rescan reason. */
   private[operators] def baseCorpusCounts(s: SparkSession,
                                           dir: String): DataFrame =
-    baseCountsReg.getOrCompute(s, dir) {
-      val df = corpusCounts(basePostings(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    Registry.frame("baseCorpusCounts", s, dir)(
+      corpusCounts(basePostings(s, dir)))
 
   /** The arriving batch's postings — the [[s15Res]] doc slice pushed
     * through the SAME chunk + encode chain as the base (encode is
@@ -235,17 +196,11 @@ private[operators] trait SimilaritySparse { this: Similarity.type =>
     * ways — append to postings, token-stats merge, counter merge — and
     * a production refresh encodes the arriving batch ONCE, not once
     * per consumer; O(batch) memory, same contract as s15's slice. */
-  private[operators] val batchPostReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   private[operators] def batchPostings(s: SparkSession, dir: String): DataFrame =
-    batchPostReg.getOrCompute(s, dir) {
-      val df = rawPostings(TextAnalysis.queries("c3_chunk_corpus")(s, dir)
+    Registry.frame("batchPostings", s, dir) {
+      rawPostings(TextAnalysis.queries("c3_chunk_corpus")(s, dir)
         .filter(pmod(col("doc_id"), lit(s15Mod)) === lit(s15Res))
         .select(col("doc_id"), col("chunk_idx"), col("chunk_text")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** The refreshed sparse index: base postings + the batch's encoded
@@ -266,13 +221,10 @@ private[operators] trait SimilaritySparse { this: Similarity.type =>
     * vocab-sized merge shuffle is refresh-time cost, not serving-time.
     * ≡ tokenStats(refreshedPostings) by df additivity over disjoint
     * chunk sets (spec-pinned). */
-  private[operators] val refStatsReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   private[graft] def refreshedStats(s: SparkSession,
                                     dir: String): DataFrame =
-    refStatsReg.getOrCompute(s, dir) {
-      val df = baseTokenStats(s, dir)
+    Registry.frame("refreshedStats", s, dir) {
+      baseTokenStats(s, dir)
         .withColumnRenamed("df", "df_base")
         .join(tokenStats(batchPostings(s, dir))
           .withColumnRenamed("df", "df_batch"), Seq("token"),
@@ -280,9 +232,6 @@ private[operators] trait SimilaritySparse { this: Similarity.type =>
         .select(col("token"),
           (coalesce(col("df_base"), lit(0L))
             + coalesce(col("df_batch"), lit(0L))).as("df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** Merged corpus counters: base one-row + batch one-row, summed —
@@ -291,19 +240,13 @@ private[operators] trait SimilaritySparse { this: Similarity.type =>
     * Re-persisted with [[refreshedStats]] (one row; the cost it saves
     * is the batch-side counter recompute, not the merge itself).
     * ≡ corpusCounts(refreshedPostings) (spec-pinned). */
-  private[operators] val refCountsReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
   private[graft] def refreshedCounts(s: SparkSession,
                                      dir: String): DataFrame =
-    refCountsReg.getOrCompute(s, dir) {
-      val df = baseCorpusCounts(s, dir)
+    Registry.frame("refreshedCounts", s, dir) {
+      baseCorpusCounts(s, dir)
         .unionByName(corpusCounts(batchPostings(s, dir)))
         .agg(sum(col("n_chunks")).as("n_chunks"),
           sum(col("len_sum")).as("len_sum"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** S18: INCREMENTAL SPARSE-INDEX REFRESH — s15's operational leg for

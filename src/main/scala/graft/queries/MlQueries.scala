@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Registry
 import graft.core.Tables.t
 import graft.ml.{AbtSplits, ChampionModel, Scoring}
 
@@ -41,38 +42,19 @@ object MlQueries {
       .drop("rn")
   }
 
-  /** ABT cache: built+persisted once per (session, dir) — m1/m3/m4 and the
-    * model fit all read it, and at driver-bench scale the recomputation
-    * (a shuffle + window over orders) dominated m1's cold cost.
-    * Lifecycle via [[graft.core.Registry]]: content-fingerprinted keys
-    * (an in-place regeneration rebuilds, never serves the stale frame)
-    * and eviction+unpersist of superseded generations. */
-  private val abtReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+  /** The ABT: m1/m3/m4 and the model fit all read it, and at
+    * driver-bench scale the recomputation (a shuffle + window over
+    * orders) dominated m1's cold cost. */
   private[graft] def abt(s: SparkSession, dir: String): DataFrame =
-    abtReg.getOrCompute(s, dir) {
-      val df = abtPlan(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // materialize now so every consumer hits warm blocks
-      df
-    }
+    Registry.frame("abt", s, dir)(abtPlan(s, dir))
 
   private val features =
     Seq("n_orders", "total_spent", "avg_price", "avg_urgent_price", "n_urgent")
 
-  /** Model registry: fit once per (session, dir) — the three ML queries
-    * share one deterministic fit (seed 42), like a production model store.
-    * Keyed on the session too so a fresh driver session refits; data
-    * regenerated in place under `dir` changes the content fingerprint,
-    * so the registry refits and drops the superseded model (models hold
-    * no persisted frames — release is a no-op, eviction just unpins the
-    * reference). */
-  private val fitted =
-    new graft.core.Registry[org.apache.spark.ml.PipelineModel](_ => ())
-
+  /** The fitted champion model: the three ML queries share one
+    * deterministic fit (seed 42), like a production model store. */
   private[graft] def model(s: SparkSession, dir: String) =
-    fitted.getOrCompute(s, dir) {
+    Registry.value[org.apache.spark.ml.PipelineModel]("model", s, dir) {
       val sp = AbtSplits.split(abt(s, dir), "o_custkey", "yr", 1998)
       // Content-hash partitioning (not round-robin) + in-partition sort +
       // persist before the multi-pass RF fit: MLlib's bagging/split-
@@ -261,19 +243,16 @@ object MlQueries {
   /** The TRAINED quality model: MLlib logistic regression fit on the
     * annotation silver stage against the deterministic label rule —
     * the production shape where t2's fixed weights are replaced by a
-    * classifier trained on labeled documents. Fit once per (session,
-    * dir) via the registry (the [[model]] lifecycle); determinism is
-    * pinned the m3 way: content-hash partitioning + in-partition sort
+    * classifier trained on labeled documents. Determinism is pinned the
+    * m3 way: content-hash partitioning + in-partition sort
     * + persist before the multi-pass LBFGS fit, so gradient
     * aggregation order is content-deterministic and the fitted
     * coefficients (and m7's golden histogram + MlSpec metrics)
     * reproduce across hosts and input layouts. */
-  private val qualityFitted =
-    new graft.core.Registry[org.apache.spark.ml.PipelineModel](_ => ())
-
   private[graft] def qualityModel(s: SparkSession,
                                   dir: String): org.apache.spark.ml.PipelineModel =
-    qualityFitted.getOrCompute(s, dir) {
+    Registry.value[org.apache.spark.ml.PipelineModel](
+        "qualityModel", s, dir) {
       val train = annotFeatures(s, dir)
         .repartition(8, col("doc_id")).sortWithinPartitions("doc_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -406,25 +385,18 @@ object MlQueries {
       .orderBy("doc_id")
   }
 
-  /** Persisted trained-score frame (doc_id, label, p6) — the narrow
-    * projection of [[qualityScored]] the curriculum consumers read.
-    * Persisted because [[bandedCurriculum]] references its input in
-    * THREE subtrees (local rank window, band offsets, total count);
-    * an un-persisted frame would re-run the model transform over the
-    * corpus once per reference (the m7 one-pass rule — round-13
-    * review; u13 doesn't need this because its m6 input is arithmetic
-    * over the already-persisted annotation artifact). */
-  private val trainedScoreReg =
-    new graft.core.Registry[DataFrame](_.unpersist(false))
-
+  /** Trained-score frame (doc_id, label, p6) — the narrow projection
+    * of [[qualityScored]] the curriculum consumers read. An artifact
+    * because [[bandedCurriculum]] references its input in THREE
+    * subtrees (local rank window, band offsets, total count); an
+    * un-persisted frame would re-run the model transform over the
+    * corpus once per reference (u13 doesn't need this because its m6
+    * input is arithmetic over the annotation artifact). */
   private def trainedScore6(s: SparkSession, dir: String): DataFrame =
-    trainedScoreReg.getOrCompute(s, dir) {
-      val df = qualityScored(s, dir)
+    Registry.frame("trainedScore6", s, dir) {
+      qualityScored(s, dir)
         .select(col("doc_id"), col("label"),
           round(col("p_good"), 6).as("p6"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
     }
 
   /** Per-document curriculum layout under the TRAINED m7 score — the
