@@ -837,6 +837,10 @@ object Dedup {
   private[operators] val d11Mod = 7L
   private[operators] val d11Res = 3L
 
+  /** The docs of arrival slice `res` of the d11 mod split. */
+  private[operators] def inResidue(res: Long): Column =
+    pmod(col("doc_id"), lit(d11Mod)) === lit(res)
+
   /** D11: INCREMENTAL dedup — screen an incoming batch against the
     * corpus LSH index withOUT re-deduping the corpus: band rows of the
     * batch probe the index's (band, bandHash) buckets, survivors verify
@@ -848,19 +852,16 @@ object Dedup {
     * magnitude smaller — broadcasts its band rows against it; batch-
     * internal duplicates are d1/d3's job on the batch alone. */
   val d11IncrementalDedup: Q = (s, dir) => {
-    val isBatch = pmod(col("doc_id"), lit(d11Mod)) === d11Res
+    val isBatch = inResidue(d11Res)
     // One-shot form: the arriving set is expressible as a PREDICATE, so
     // both the probe side and the verdict frame stay narrow filters —
     // no id join whose build side scales with the corpus (at 100 TB the
     // full batch's id frame would blow the broadcast ceiling and
     // degrade to shuffling the 4×-corpus banded index on doc_id).
-    // orderBy HERE, not in the shared probe body: this is the only
-    // consumer whose returned frame IS the gated output (r20 measure:
-    // every streaming consumer re-sorts after its sink union, so a sort
-    // inside the probe body paid a shuffle + global sort per micro-batch
-    // for row order the sink write immediately discarded; a large probe
-    // output also paid a range-sample job, which a small one skips
-    // under plans.SmallSortSinglePartition).
+    // orderBy HERE, not in the shared probe body: every streaming
+    // consumer re-sorts after its sink union, so a sort inside the
+    // probe body would pay a shuffle + global sort per micro-batch for
+    // row order the sink write discards.
     d11ProbeFrames(s, dir,
       banded(s, dir).filter(isBatch),
       t(s, dir, "documents").filter(isBatch).select("doc_id"))
@@ -882,9 +883,8 @@ object Dedup {
     * row). The index side is always the full non-batch corpus. */
   private def d11ProbeFrames(s: SparkSession, dir: String,
       probeBand: DataFrame, arriving: DataFrame): DataFrame = {
-    val isBatch = pmod(col("doc_id"), lit(d11Mod)) === d11Res
     val b = banded(s, dir)
-    val idx = b.filter(!isBatch)
+    val idx = b.filter(!inResidue(d11Res))
       .select(col("band"), col("bh"), col("doc_id").as("old_id"))
     val probe = probeBand
       .select(col("band"), col("bh"), col("doc_id").as("new_id"))
@@ -911,12 +911,8 @@ object Dedup {
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),
         col("best_jaccard"),
         when(col("n_dups").isNull, "ingest").otherwise("drop").as("verdict"))
-    // NO final orderBy here (r20): per-doc verdicts are row-complete as
-    // computed; the one-shot d11 gate sorts at its own seam, and every
-    // streaming consumer (d12/d13 sink unions, the d16/d17/d18 tick
-    // outputs) re-sorts after union — the sort here cost one shuffle +
-    // global sort PER MICRO-BATCH (and a range sample above the
-    // one-partition size), discarded by the sink write.
+    // no final orderBy: the one-shot d11 gate sorts at its own seam and
+    // every streaming consumer re-sorts after its sink union
   }
 
   /** D12: STREAMING INGEST GATE — the d11 screen as it actually runs in
@@ -935,69 +931,53 @@ object Dedup {
     * the stream — zero streaming state rows, and each micro-batch costs
     * O(batch × bucket occupancy), never a corpus rescan. */
   val d12StreamIngestGate: Q = (s, dir) =>
-    streamVerdicts(s, dir, "d12_stream_ingest_gate",
-      (mb: DataFrame) => d11Probe(s, dir, mb.select("doc_id")))
+    replayArrivals(s, dir, d11Res, "d12_stream_ingest_gate")(
+      mb => d11Probe(s, dir, mb.select("doc_id")))
+      .orderBy("doc_id")
 
   /** D13: CLUSTER-TAGGED STREAMING INGEST — the operational composition
     * of the d12 gate with the PERSISTED k-means centroid artifact
     * (Similarity.kmeansCentroids): each arriving micro-batch gets the
     * d11 dedup verdict AND its semantic-cluster tag in the same
-    * foreachBatch pass, so documents land in the corpus already labeled
-    * for mixture weighting / per-domain sampling (the s7→u9 pipeline)
-    * without a later corpus-wide assignment job.
+    * foreachBatch pass ([[verdictTagProbe]]), so documents land in the
+    * corpus already labeled for mixture weighting / per-domain sampling
+    * (the s7→u9 pipeline) without a later corpus-wide assignment job.
     *
     * Scale shape: both probed artifacts are SESSION-PERSISTED state —
     * the LSH band index for the verdict, the k-row centroid frame for
-    * the tag (one broadcast row, map-only argmin over just the arriving
-    * docs' embeddings) — so the stream itself keeps ZERO state rows and
-    * each micro-batch costs O(batch × bucket occupancy) + O(batch × k).
-    * The embedding lookup joins the batch id frame into the embeddings
-    * table (broadcast — a trigger's worth of ids), standing in for the
-    * embed-on-arrival step a production ingest runs before the tag.
-    * LEFT join on the tag: a doc with no embedding still gets its
-    * dedup verdict (cluster null), never a dropped verdict row. */
+    * the tag — so the stream itself keeps ZERO state rows and each
+    * micro-batch costs O(batch × bucket occupancy) + O(batch × k). */
   val d13StreamClusterTag: Q = (s, dir) =>
-    streamVerdicts(s, dir, "d13_stream_cluster_tag", (mb: DataFrame) => {
-      val ids = mb.select("doc_id")
-      val verdicts = d11Probe(s, dir, ids)
-      val arriving = t(s, dir, "embeddings")
-        .join(maybeBroadcast(ids.select(col("doc_id").as("vec_id"))),
-          Seq("vec_id"))
-        .select(col("vec_id"), col("embedding"))
-      val tagged = Similarity
-        .kmeansAssign(arriving, Similarity.kmeansCentroids(s, dir))
-        .select(col("vec_id").as("doc_id"), col("cluster"))
-      verdicts.join(tagged, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_dups"), col("best_jaccard"),
-          col("verdict"), col("cluster"))
-    })
-
-  /** Shared streaming-ingest harness behind d12/d13: stage the arriving
-    * (modular-slice) docs as a 2-file parquet dir, replay it as an
-    * AvailableNow stream with `maxFilesPerTrigger = 1` (genuinely
-    * multi-batch), run `probe` per micro-batch into an idempotent
-    * batch=<id> overwrite sink, and return the sink's union. Per-doc
-    * probe outputs are batch-split invariant, which is exactly what the
-    * shared one-shot oracles assert. */
-  private def streamVerdicts(s: SparkSession, dir: String, tag: String,
-      probe: DataFrame => DataFrame): DataFrame = {
-    val isBatch = pmod(col("doc_id"), lit(d11Mod)) === d11Res
-    val arriving = t(s, dir, "documents").filter(isBatch).select("doc_id")
-    // Staging key includes the batch-selection constants (a changed
-    // mod/res must not replay an old split); the shared harness adds
-    // the pid key, _SUCCESS completeness judgment, the in-JVM lock,
-    // the per-call idempotent sink, and the probe-write label.
-    val fp = graft.core.Tables.sourceFingerprint(s"$dir/documents.parquet")
-    graft.streaming.Streams.replayForeachBatch(s,
-        arriving.repartitionByRange(2, col("doc_id")),
-        s"docs-$fp-${d11Mod}m$d11Res", shape = "r2", tag = tag)(probe)
+    replayArrivals(s, dir, d11Res, "d13_stream_cluster_tag")(
+      verdictTagProbe(s, dir))
       .orderBy("doc_id")
+
+  /** The arrival replay of every ingest tick (d12, d13, d16 and each
+    * tick of [[tickStore]]): stage the docs of arrival slice `res` as a
+    * 2-file parquet dir, replay it as an AvailableNow stream with
+    * `maxFilesPerTrigger = 1` (genuinely multi-batch), run
+    * `foldEach(mb, batchId)` and then `probe` per micro-batch into an
+    * idempotent batch=<id> overwrite sink, and return the sink's union.
+    * Per-doc probe outputs are batch-split invariant, which is exactly
+    * what the one-shot oracles assert. The staging key carries the
+    * split's mod and residue, so a changed slice never replays an old
+    * staging; the harness adds the pid key, the _SUCCESS completeness
+    * judgment, the in-JVM lock and the per-call sink. */
+  private def replayArrivals(s: SparkSession, dir: String, res: Long,
+      tag: String)(probe: DataFrame => DataFrame,
+      foldEach: (DataFrame, Long) => Unit = (_, _) => ()): DataFrame = {
+    val fp = graft.core.Tables.sourceFingerprint(s"$dir/documents.parquet")
+    val arriving = t(s, dir, "documents").filter(inResidue(res))
+      .select("doc_id")
+    graft.streaming.Streams.replayForeachBatch(s,
+      arriving.repartitionByRange(2, col("doc_id")),
+      s"docs-$fp-${d11Mod}m$res", shape = "r2", tag = tag)(probe, foldEach)
   }
 
   /** The d16 base-slice chunk corpus (non-arriving docs). */
   private def d16BaseChunks(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.queries("c3_chunk_corpus")(s, dir)
-      .filter(pmod(col("doc_id"), lit(d11Mod)) =!= lit(d11Res))
+      .filter(!inResidue(d11Res))
 
   /** Base-side (pre-tick) index artifacts of the d16 tick: the dense
     * retrieval index and the raw sparse postings over the NON-arriving
@@ -1020,9 +1000,13 @@ object Dedup {
       Similarity.rawPostings(d16BaseChunks(s, dir)
         .select(col("doc_id"), col("chunk_idx"), col("chunk_text"))))
 
-  /** THE per-micro-batch probe of an ingest tick — the d13 composition
-    * (dedup verdict + semantic-cluster tag), factored out of d16 so the
-    * versioned-store ticks (d17/d18) run the IDENTICAL verdict leg. */
+  /** THE per-micro-batch probe of an ingest tick: the d11 dedup verdict
+    * plus the semantic-cluster tag, run by d13, d16 and the store ticks.
+    * The embedding lookup joins the batch id frame into the embeddings
+    * table (broadcast — a trigger's worth of ids), standing in for the
+    * embed-on-arrival step a production ingest runs before the tag; the
+    * LEFT join keeps the verdict of a doc with no embedding (cluster
+    * null). */
   private[operators] def verdictTagProbe(s: SparkSession, dir: String)
                                         (mb: DataFrame): DataFrame = {
     val ids = mb.select("doc_id")
@@ -1039,6 +1023,72 @@ object Dedup {
         col("verdict"), col("cluster"))
   }
 
+  /** The fold of one tick's micro-batches into both index sides — the
+    * s15 dense chunk index and the s18 sparse postings — for d16 and
+    * every [[tickStore]] tick. It returns the replay's `foldEach`; the
+    * caller passes only its two writes, `writeDense(batchId, rows)` and
+    * `writeSparse(batchId, rows)`, each of which must land one
+    * micro-batch in its own idempotent batch=<id> dir (an at-least-once
+    * retry rewrites its own dir — the s27 sink rule).
+    *
+    * A micro-batch is a CONTIGUOUS doc_id range of the arriving slice by
+    * construction (range-split staging × one file per trigger), so the
+    * chunk restriction is a doc_id BETWEEN + residue PREDICATE that
+    * pushes down the narrow c3 chain to the parquet scan; a broadcast-
+    * join restriction cannot prune the scan. The batch's chunk frame is
+    * persisted for the fold's duration so both sides read one chunk-
+    * chain run — batch-sized, and unpersisted before the batch commits.
+    * The two writes are independent (different dirs, both pure functions
+    * of the chunks), so they run concurrently: the sparse write's tasks
+    * back-fill the executors the dense write's tail leaves idle. An
+    * empty micro-batch folds nothing. */
+  private def batchFold(s: SparkSession, dir: String, res: Long)
+      (writeDense: (Long, DataFrame) => Unit,
+       writeSparse: (Long, DataFrame) => Unit): (DataFrame, Long) => Unit = {
+    val corpus = TextAnalysis.queries("c3_chunk_corpus")(s, dir)
+    (mb, batchId) => {
+      val bounds = mb.agg(min("doc_id"), max("doc_id")).collect()(0)
+      if (!bounds.isNullAt(0)) {
+        val chunks = corpus
+          .filter(col("doc_id").between(bounds.getLong(0),
+            bounds.getLong(1)) && inResidue(res))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try graft.core.Jobs.concurrently {
+          writeDense(batchId, Similarity.encodeChunks(chunks))
+        } {
+          writeSparse(batchId, Similarity.rawPostings(chunks
+            .select(col("doc_id"), col("chunk_idx"), col("chunk_text"))))
+        } finally chunks.unpersist(false)
+      }
+    }
+  }
+
+  /** The gated output of a single-slice tick (d16, d17): per arriving
+    * doc, its verdict+tag row joined to READBACKS of what the tick's
+    * folds added — chunks indexed, postings rows, token occurrences —
+    * each column nonzero only if its fold actually ran, so one frame
+    * gates the whole tick. The readbacks come from the BATCH-SIZED
+    * deltas alone, so this is O(batch) and the base artifact is never
+    * rescanned per tick (a union-then-filter form would map-scan the
+    * whole base). */
+  private def tickReadback(verdicts: DataFrame, denseDeltas: DataFrame,
+      sparseDeltas: DataFrame): DataFrame = {
+    val nChunks = denseDeltas
+      .groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
+    val nPost = sparseDeltas
+      .groupBy("doc_id").agg(count(lit(1)).as("n_postings"),
+        sum("tf").as("n_tokens"))
+    verdicts
+      .join(nChunks, Seq("doc_id"), "left")
+      .join(nPost, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_dups"), col("best_jaccard"),
+        col("verdict"), col("cluster"),
+        coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
+        coalesce(col("n_postings"), lit(0L)).as("n_postings"),
+        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
+      .orderBy("doc_id")
+  }
+
   /** The d16 tick body — returns (gated output, post-tick dense index,
     * post-tick sparse postings) so the spec can pin tick-index ≡
     * one-shot-rebuild equivalence and serve retrieval through the
@@ -1051,54 +1101,15 @@ object Dedup {
     // allocator's {current, previous} retention): an earlier tick's
     // returned frames read their own delta version lazily, and a
     // long-lived session holds at most two encoded-slice copies
-    val isBatch = pmod(col("doc_id"), lit(d11Mod)) === lit(d11Res)
-    val arriving = t(s, dir, "documents").filter(isBatch).select("doc_id")
     val (deltaDir, verdicts) = graft.core.StoreFs.buildVersion(s,
         graft.core.StoreFs.root(s, s"d16-deltas-$fp")) { v =>
-      graft.streaming.Streams.replayForeachBatch(s,
-        arriving.repartitionByRange(2, col("doc_id")),
-        s"docs-$fp-${d11Mod}m$d11Res", shape = "r2",
-        tag = "d16_ingest_tick")(
-        probe = verdictTagProbe(s, dir),
-        foldEach = { (mb, batchId) =>
-          // the s15 + s18 folds for THIS micro-batch's docs, landing in
-          // idempotent batch=<id> subdirs (an at-least-once retry
-          // rewrites its own dir — the s27 sink rule). The batch is a
-          // CONTIGUOUS range of the arriving slice by construction
-          // (range-split staging × one file per trigger), so the chunk
-          // restriction is a doc_id BETWEEN + residue PREDICATE that
-          // pushes down the narrow c3 chain to the parquet scan (the
-          // encodedBatch measured choice) — a broadcast-join restriction
-          // was the first cut and cannot prune the scan, re-running the
-          // full chunking pipeline per fold write.
-          val bounds = mb.agg(min("doc_id"), max("doc_id")).collect()(0)
-          if (!bounds.isNullAt(0)) {
-            // ONE chunk-chain run per micro-batch (r20 measure: the dense
-            // and sparse folds each re-ran the curation ∩ chunking chain
-            // — persist the batch-sized chunk frame for the fold's
-            // duration so both sides read it; bounded memory at any scale,
-            // unpersisted before the batch commits)
-            val chunks = TextAnalysis.queries("c3_chunk_corpus")(s, dir)
-              .filter(col("doc_id").between(bounds.getLong(0),
-                  bounds.getLong(1)) &&
-                pmod(col("doc_id"), lit(d11Mod)) === lit(d11Res))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            // the two fold writes are independent (different dirs, both
-            // pure functions of `chunks`) — run them concurrently (guide
-            // §2.6) so the sparse fold's tasks back-fill the executors
-            // the dense fold's write tail leaves idle (r20 measure:
-            // sequential folds were the largest cost of the tick)
-            try graft.core.Jobs.concurrently {
-              Similarity.encodeChunks(chunks).write.mode("overwrite")
-                .parquet(s"$v/dense/batch=$batchId")
-            } {
-              Similarity.rawPostings(chunks
-                  .select(col("doc_id"), col("chunk_idx"), col("chunk_text")))
-                .write.mode("overwrite")
-                .parquet(s"$v/sparse/batch=$batchId")
-            } finally chunks.unpersist(false)
-          }
-        })
+      replayArrivals(s, dir, d11Res, "d16_ingest_tick")(
+        verdictTagProbe(s, dir),
+        batchFold(s, dir, d11Res)(
+          (b, dense) => dense.write.mode("overwrite")
+            .parquet(s"$v/dense/batch=$b"),
+          (b, sparse) => sparse.write.mode("overwrite")
+            .parquet(s"$v/sparse/batch=$b")))
     }
     // post-tick serving state: base artifact + the accumulated fold
     // deltas (what s21's compaction cadence later folds physically).
@@ -1111,43 +1122,21 @@ object Dedup {
       else base.limit(0)
     val denseDeltas = deltas(d16BaseDense(s, dir), "dense")
     val sparseDeltas = deltas(d16BasePostings(s, dir), "sparse")
-    val denseRefreshed = d16BaseDense(s, dir).unionByName(denseDeltas)
-    val sparseRefreshed = d16BasePostings(s, dir)
-      .unionByName(sparseDeltas)
-    // per-doc readbacks come from the BATCH-SIZED delta area alone —
-    // deltas hold exactly the arriving docs' fold output, so this is
-    // O(batch) and the base artifact is never rescanned per tick (at
-    // 100 TB the union-then-filter form would map-scan the whole base)
-    val nChunks = denseDeltas
-      .groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
-    val nPost = sparseDeltas
-      .groupBy("doc_id").agg(count(lit(1)).as("n_postings"),
-        sum("tf").as("n_tokens"))
-    val out = verdicts
-      .join(nChunks, Seq("doc_id"), "left")
-      .join(nPost, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_dups"), col("best_jaccard"),
-        col("verdict"), col("cluster"),
-        coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
-        coalesce(col("n_postings"), lit(0L)).as("n_postings"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
-      .orderBy("doc_id")
-    (out, denseRefreshed, sparseRefreshed)
+    (tickReadback(verdicts, denseDeltas, sparseDeltas),
+      d16BaseDense(s, dir).unionByName(denseDeltas),
+      d16BasePostings(s, dir).unionByName(sparseDeltas))
   }
 
-  /** D16: ONE STREAMING INGEST TICK (round-15 verdict item 3) — the
-    * arrival path a deployment actually runs PER MICRO-BATCH, composed
-    * in ONE foreachBatch: the d11 dedup verdict, the d13 semantic-
-    * cluster tag, the s15 dense-index fold, and the s18 sparse-postings
-    * fold — then serves from the refreshed indexes. Each micro-batch
-    * encodes its arriving docs ONCE and lands each fold in an
-    * idempotent batch=<id> delta dir next to the base artifact (the
-    * production delta-area shape whose physical fold-in is s21's
-    * compaction cadence); verdict+tag rows accumulate through the d12
-    * sink. The gated output joins, per arriving doc, the verdict+tag
-    * with READBACKS from the refreshed artifacts (chunks indexed,
-    * postings rows, token occurrences) — each column lands only if its
-    * stage actually folded, so one frame gates the whole tick.
+  /** D16: ONE STREAMING INGEST TICK — the arrival path a deployment
+    * actually runs PER MICRO-BATCH, composed in ONE foreachBatch: the
+    * d11 dedup verdict, the d13 semantic-cluster tag, the s15
+    * dense-index fold, and the s18 sparse-postings fold — then serves
+    * from the refreshed indexes. Each micro-batch encodes its arriving
+    * docs ONCE and lands each fold in an idempotent batch=<id> delta
+    * dir next to the base artifact (the production delta-area shape
+    * whose physical fold-in is s21's compaction cadence); verdict+tag
+    * rows accumulate through the d12 sink. The gated output is
+    * [[tickReadback]] over the delta area.
     * Oracle: the composition of the stages' own one-shot duals — the
     * d13 SQL left-joined to relational recomputes of the arriving
     * slice's chunk and posting counts (every stage is batch-split
@@ -1158,8 +1147,7 @@ object Dedup {
     * Scale shape: zero streaming state rows (the probed artifacts are
     * persisted session state; the folds are batch-sized writes);
     * per-tick cost is O(batch × bucket occupancy) for the verdict,
-    * O(batch × k) for the tag, and O(batch) encode for the folds —
-    * never a corpus rescan, never a corpus reshuffle. */
+    * O(batch × k) for the tag, and O(batch) encode for the folds. */
   val d16IngestTick: Q = (s, dir) => d16Tick(s, dir)._1
 
   // ------------------------------------------------------------------ //
@@ -1199,38 +1187,33 @@ object Dedup {
     * batch = i·span + b. The gated replays stage 2 micro-batches
     * (shape r2); the span leaves production headroom and [[tickStore]]
     * REQUIRES b < span — silent cross-tick overwrite is the one
-    * failure dynamic partition overwrite would not surface. */
+    * failure an overwrite of the batch dir would not surface. */
   private[operators] val tickBatchSpan = 100L
 
-  /** D17 MACHINERY — ONE VERSIONED TICK STORE (round-16 verdict item
-    * 1): d16 proved the tick's shape but parks its fold deltas in a
-    * delta area BESIDE the base artifact, off the store lineage every
-    * other lifecycle gate uses; this builder routes the SAME tick
+  /** D17 MACHINERY — ONE VERSIONED TICK STORE: d16's tick routed
     * through [[graft.core.StoreFs.buildVersion]]/[[Similarity.writeStore]]
     * so arrival folds live on the store lineage that compaction,
     * tombstone folds and re-buckets operate on — one crash/retention
     * contract (publish-on-success, {current, previous} vacuum) for the
-    * whole production index lifecycle.
+    * whole production index lifecycle, instead of d16's delta area
+    * beside the base artifact.
     *
     * One invocation = one store version holding: the base snapshot of
     * BOTH index sides (dense chunk index under batch=-1/bkt=*, sparse
-    * postings under batch=-1/tsh=*), then one streaming replay per
+    * postings under batch=-1/tsh=*), then one [[replayArrivals]] per
     * arrival slice in `arrivalResidues`, each micro-batch folding its
-    * dense+sparse encode into its own batch=<seq> partitions via
-    * DYNAMIC partition overwrite (an at-least-once retry rewrites its
-    * own partitions — the idempotent batch-subdir rule, expressed
-    * through the store writer instead of a hand-managed dir). The
-    * batch restriction is the d16 contiguous doc_id-range + residue
-    * predicate (pushes down the narrow c3 chain to the parquet scan).
-    * `afterTick(i, store)` runs after each slice's replay — the spec's
-    * convergence hook (d19 pins refreshed ≡ rebuild after EVERY tick).
-    * Returns (per-tick probe unions, store path).
+    * dense+sparse encode ([[batchFold]]) into its own batch=<seq> dir of
+    * each side, overwritten as a whole (an at-least-once retry rewrites
+    * its own dir; partition discovery reads the batch value back from
+    * the dir name). `afterTick(i, store)` runs after each slice's
+    * replay — the spec's convergence hook (d19 pins refreshed ≡ rebuild
+    * after EVERY tick). Returns (per-tick probe unions, store path).
     *
     * Scale shape: base snapshot cost is paid once per version (the s21
     * precedent — the gated entries replay the lifecycle by design);
-    * each fold is O(batch) encode + one dynamic-overwrite write of
-    * batch-sized partitions; readbacks and convergence checks prune on
-    * the leading batch column. Nothing rescans or reshuffles the base. */
+    * each fold is O(batch) encode + one write of batch-sized
+    * partitions; readbacks and convergence checks prune on the leading
+    * batch column. Nothing rescans or reshuffles the base. */
   private[operators] def tickStore(s: SparkSession, dir: String,
       tag: String, arrivalResidues: Seq[Long],
       probe: DataFrame => DataFrame,
@@ -1244,17 +1227,13 @@ object Dedup {
       arrivalResidues.distinct == arrivalResidues &&
       arrivalResidues.forall(r => r >= 0 && r < d11Mod),
       s"tick residues must be distinct mod-$d11Mod values incl. $d11Res")
-    val fp = graft.core.Tables.sourceFingerprint(s"$dir/documents.parquet")
-    val notArriving = arrivalResidues
-      .map(r => pmod(col("doc_id"), lit(d11Mod)) =!= lit(r))
-      .reduce(_ && _)
-    val chunksAll = TextAnalysis.queries("c3_chunk_corpus")(s, dir)
+    val notArriving = arrivalResidues.map(r => !inResidue(r)).reduce(_ && _)
     val (version, ticks) = graft.core.StoreFs.buildVersion(s,
         Similarity.storeRoot(s, dir, tag)) { v =>
       val store = Similarity.idxOf(v)
       // independent sides, independent dirs: snapshot them concurrently
-      // (guide §2.6) — the sparse write's shuffle reads back-fill the
-      // dense write's task tail
+      // — the sparse write's shuffle reads back-fill the dense write's
+      // task tail
       graft.core.Jobs.concurrently {
         Similarity.writeStore(
           d16BaseDense(s, dir).filter(notArriving)
@@ -1267,55 +1246,25 @@ object Dedup {
           s"$store/sparse", tickSparsePart)
       }
       arrivalResidues.zipWithIndex.map { case (res, i) =>
-        val isTick = pmod(col("doc_id"), lit(d11Mod)) === lit(res)
-        val arriving = t(s, dir, "documents").filter(isTick)
-          .select("doc_id")
-        val out = graft.streaming.Streams.replayForeachBatch(s,
-          arriving.repartitionByRange(2, col("doc_id")),
-          s"docs-$fp-${d11Mod}m$res", shape = "r2", tag = tag)(
-          probe = probe,
-          foldEach = { (mb, batchId) =>
-            val bounds = mb.agg(min("doc_id"), max("doc_id")).collect()(0)
-            if (!bounds.isNullAt(0)) {
-              // unique batch partition per (tick, micro-batch): batch
-              // ids restart at 0 per replay, and tick i's fold must
-              // never overwrite tick i-1's partitions. The span guard
-              // is load-bearing BECAUSE the write is a dynamic
-              // overwrite: an unguarded batchId >= span would land in
-              // the NEXT tick's namespace and silently replace its
-              // fold (review-pass finding)
-              require(batchId >= 0 && batchId < tickBatchSpan,
-                s"micro-batch id $batchId outside the per-tick span " +
-                  s"$tickBatchSpan — widen tickBatchSpan")
-              val seq = i * tickBatchSpan + batchId
-              // ONE chunk-chain run per micro-batch, shared by both
-              // sides (the d16 fold rationale); unpersisted before the
-              // batch commits — bounded memory at any scale
-              val chunks = chunksAll.filter(
-                col("doc_id").between(bounds.getLong(0),
-                  bounds.getLong(1)) && isTick)
-                .persist(org.apache.spark.storage.StorageLevel
-                  .MEMORY_AND_DISK)
-              // independent sides, independent partition dirs (each
-              // fold overwrites only its own batch=<seq> namespace on
-              // its own side — the batch value carried by the target
-              // path, inferred back by partition discovery exactly as
-              // the old dynamic-overwrite column was) — concurrent per
-              // guide §2.6
-              try graft.core.Jobs.concurrently {
-                Similarity.writeStore(
-                  Similarity.encodeChunks(chunks),
-                  s"$store/dense/batch=$seq", tickDensePart.drop(1),
-                  overwriteDir = true)
-              } {
-                Similarity.writeStore(
-                  withTsh(Similarity.rawPostings(chunks.select(
-                    col("doc_id"), col("chunk_idx"), col("chunk_text")))),
-                  s"$store/sparse/batch=$seq", tickSparsePart.drop(1),
-                  overwriteDir = true)
-              } finally chunks.unpersist(false)
-            }
-          })
+        // one batch dir per (tick, micro-batch): batch ids restart at 0
+        // per replay, and tick i's fold must never overwrite tick i-1's
+        // dirs. The span guard is load-bearing BECAUSE the write
+        // overwrites its dir: an unguarded batchId >= span would land in
+        // the NEXT tick's namespace and silently replace its fold
+        def seq(batchId: Long): Long = {
+          require(batchId >= 0 && batchId < tickBatchSpan,
+            s"micro-batch id $batchId outside the per-tick span " +
+              s"$tickBatchSpan — widen tickBatchSpan")
+          i * tickBatchSpan + batchId
+        }
+        val out = replayArrivals(s, dir, res, tag)(probe,
+          batchFold(s, dir, res)(
+            (b, dense) => Similarity.writeStore(dense,
+              s"$store/dense/batch=${seq(b)}", tickDensePart.drop(1),
+              overwriteDir = true),
+            (b, sparse) => Similarity.writeStore(withTsh(sparse),
+              s"$store/sparse/batch=${seq(b)}", tickSparsePart.drop(1),
+              overwriteDir = true)))
         afterTick(i, store)
         out
       }
@@ -1337,36 +1286,22 @@ object Dedup {
     else projected
   }
 
-  /** D17: THE TICK ON THE VERSIONED STORE — d16's successor entry
-    * (round-16 verdict item 1): the identical ingest tick (same arrival
-    * slice, same verdict+tag probe, same fold encodes), with the fold
-    * deltas landing as batch=<seq> partitions of a
-    * [[graft.core.StoreFs.buildVersion]] snapshot next to the base
-    * artifacts instead of a hand-retained tmpdir delta area. Per-doc
-    * readbacks prune on the leading batch partition column (batch >= 0
-    * — exactly the fold output, O(batch), base partitions never read).
-    * Oracle: [[d16Sql]] VERBATIM — the store lineage must be invisible
-    * to results; DedupSpec additionally pins store state (base + delta
-    * partitions, tick ≡ one-shot rebuild on both sides). */
+  /** D17: THE TICK ON THE VERSIONED STORE — d16's successor entry: the
+    * identical ingest tick (same arrival slice, same verdict+tag probe,
+    * same fold encodes), with the fold deltas landing as batch=<seq>
+    * partitions of a [[graft.core.StoreFs.buildVersion]] snapshot next
+    * to the base artifacts instead of d16's delta area. The
+    * [[tickReadback]] prunes on the leading batch partition column
+    * (batch >= 0 — exactly the fold output, base partitions never
+    * read). Oracle: [[d16Sql]] VERBATIM — the store lineage must be
+    * invisible to results; DedupSpec additionally pins store state
+    * (base + delta partitions, tick ≡ one-shot rebuild on both sides). */
   val d17TickStore: Q = (s, dir) => {
     val (ticks, store) = tickStore(s, dir, "d17_tick_store", Seq(d11Res),
       probe = verdictTagProbe(s, dir))
-    val denseDeltas = tickSide(s, store, "dense").filter(col("batch") >= 0)
-    val sparseDeltas = tickSide(s, store, "sparse").filter(col("batch") >= 0)
-    val nChunks = denseDeltas
-      .groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
-    val nPost = sparseDeltas
-      .groupBy("doc_id").agg(count(lit(1)).as("n_postings"),
-        sum("tf").as("n_tokens"))
-    ticks.head
-      .join(nChunks, Seq("doc_id"), "left")
-      .join(nPost, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_dups"), col("best_jaccard"),
-        col("verdict"), col("cluster"),
-        coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
-        coalesce(col("n_postings"), lit(0L)).as("n_postings"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
-      .orderBy("doc_id")
+    tickReadback(ticks.head,
+      tickSide(s, store, "dense").filter(col("batch") >= 0),
+      tickSide(s, store, "sparse").filter(col("batch") >= 0))
   }
 
   /** The d18 maintenance pass over a freshly ticked store — split out
@@ -1415,8 +1350,8 @@ object Dedup {
     (health, folded)
   }
 
-  /** D18: TICK-THEN-MAINTAIN (round-16 verdict item 2) — the daily
-    * operations loop as ONE gated entry: run [[d17TickStore]]'s tick
+  /** D18: TICK-THEN-MAINTAIN — the daily operations loop as ONE gated
+    * entry: run [[d17TickStore]]'s tick
     * (same slice, same probe, same folds, own store lineage), then the
     * maintenance cadence over that store version ([[d18Maintain]]:
     * delta+tombstone fold into a fresh fold version, then the
@@ -1449,8 +1384,8 @@ object Dedup {
     * oracle rides on. */
   private[operators] val d19Residues = Seq(d11Res, 5L, 6L)
 
-  /** D19: MULTI-TICK CONVERGENCE (round-16 verdict item 3) — d16/d17
-    * replay ONE tick; this entry replays THREE over disjoint arrival
+  /** D19: MULTI-TICK CONVERGENCE — d16/d17 replay ONE tick; this
+    * entry replays THREE over disjoint arrival
     * slices into one store lineage, the compounding test that catches
     * counter-merge drift (each fold must leave the store equal to a
     * one-shot rebuild of everything folded SO FAR, not just the first).
@@ -1628,8 +1563,8 @@ object Dedup {
         LEFT JOIN sp ON sp.doc_id = v.doc_id
         ORDER BY v.doc_id"""
 
-  /** d18 oracle: the composition of the maintenance stages' own duals
-    * (round-16 verdict item 2) — [[Similarity.s24Sql]] as the serving
+  /** d18 oracle: the composition of the maintenance stages' own
+    * duals — [[Similarity.s24Sql]] as the serving
     * leg (the ticked-then-folded store ≡ rebuild-minus-deleted: base ∪
     * arrivals = corpus, and the tombstone fold is the only row-set
     * mutation), joined to a relational recompute of the folded index's
@@ -1761,7 +1696,7 @@ object Dedup {
     // relational chunk/posting counts of the arriving slice.
     "d16_ingest_tick" -> d16Sql,
     // d17 gates on d16's composed dual VERBATIM: the versioned store
-    // lineage must be invisible to results (round-16 verdict item 1)
+    // lineage must be invisible to results
     "d17_tick_store" -> d16Sql,
     "d18_tick_maintain" -> d18Sql,
     // base ∪ the three arrival slices = corpus, so the post-3-tick

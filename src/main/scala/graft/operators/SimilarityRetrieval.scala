@@ -601,8 +601,7 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
     * snapshots where the batch dimension has been compacted away. */
   val s30VersionDiff: Q = (s, dir) => {
     val idx = retrievalIndex(s, dir)
-    val arriving = pmod(col("doc_id"), lit(Dedup.d11Mod)) ===
-      lit(Dedup.d11Res)
+    val arriving = Dedup.inResidue(Dedup.d11Res)
     val tombstoned = pmod(col("doc_id"), lit(s24DelMod)) === lit(s24DelRes)
     val store = idxOf(graft.core.StoreFs.buildVersion(s,
         storeRoot(s, dir, "s30")) { v =>

@@ -974,8 +974,7 @@ object TextAnalysis {
     * PropertiesSpec pins that planted no-drift / moderate / severe
     * fixtures classify stable / watch / alert. */
   val c6FunnelDrift: Q = (s, dir) =>
-    funnelPsi(c5Dispositions(s, dir),
-      pmod(col("doc_id"), lit(Dedup.d11Mod)) === lit(Dedup.d11Res))
+    funnelPsi(c5Dispositions(s, dir), Dedup.inResidue(Dedup.d11Res))
 
   /** PSI of the per-source stage-disposition distribution between the
     * `isCur`=false (reference) and `isCur`=true (current) row sides,
