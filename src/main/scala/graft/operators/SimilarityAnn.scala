@@ -1150,12 +1150,17 @@ private[operators] trait SimilarityAnn { this: Similarity.type =>
           (bkt, data.length.toLong, data.map(_.getLen).sum / 1024L)
         }.toSeq
     }
-    import s.implicits._
-    val filesDf = perBucket.toDF("bkt", "files", "kib")
+    // the listing rides into the plan as two literal bkt -> value maps,
+    // not a broadcast join (whose broadcast runs a job of its own); the
+    // listing and the read cover the same version dir, so every bucket
+    // read has its entry
+    val files = typedLit(perBucket.map(b => b._1 -> b._2).toMap)
+    val kib = typedLit(perBucket.map(b => b._1 -> b._3).toMap)
     s.read.parquet(idxOf(version))
       .withColumn("bkt", col("bkt").cast("long"))
       .groupBy("bkt").agg(count(lit(1)).as("n_chunks"))
-      .join(broadcast(filesDf), Seq("bkt"))
+      .withColumn("files", element_at(files, col("bkt")))
+      .withColumn("kib", element_at(kib, col("bkt")))
       .withColumn("compact_due",
         (col("files") >= prof9FileBudget).cast("int"))
       .crossJoin(broadcast(

@@ -667,23 +667,24 @@ private[operators] trait SimilarityRetrieval { this: Similarity.type =>
           .filter(pmod(col("doc_id"), lit(s15Mod)) =!= lit(s15Res)))
     }
 
-  /** The ARRIVING BATCH's chunks through the encode, LAZY by measured
-    * choice: the chain from the documents scan through c3's curation ∩
-    * chunking to [[encodeChunks]] is narrow in doc_id, so every
-    * consumer's doc_id restriction PUSHES DOWN to the parquet scan —
-    * s21's three sub-batch appends each run a 1/15-of-corpus pipeline,
-    * summing to ONE batch encode of work. A persisted variant (the
-    * [[batchPostings]] registry pattern) was tried and MEASURED SLOWER
-    * end-to-end (s21 sf1 steady 11.2 s lazy vs 16-20 s persisted;
-    * sf0.1 6.4 s vs 6.9-7.3 s): materialize + cache-read-back of the
-    * wide (chunk_text, ce[64]) rows costs more than the pushed-down
-    * recompute, and the cache competes with the serving artifacts for
-    * storage memory. Don't "fix" this back without re-measuring both
-    * scales. */
+  /** The ARRIVING BATCH's chunks through the encode, per call (prof9,
+    * s15, s21, s24, s27). It reads [[TextAnalysis.c3Chunks]], c3 without
+    * its presentation sort: every consumer writes the batch through
+    * [[writeStore]], whose in-partition sort fixes the row order, or
+    * ranks it, so a global sort here would only add a shuffle. The
+    * doc_id restriction pushes down to t12's documents scan, and the
+    * curation side is a filter on the persisted
+    * [[TextAnalysis.curated]] frame, so the call's work is
+    * batch-sized. LAZY by measured choice: a persisted cross-call
+    * variant was measured slower end-to-end (s21 sf1 steady 11.2 s lazy
+    * vs 16-20 s persisted; sf0.1 6.4 s vs 6.9-7.3 s) — materializing and
+    * reading back the wide (chunk_text, ce[64]) rows costs more than
+    * the pushed-down recompute, and the cache competes with the serving
+    * artifacts for storage memory. Don't persist it across calls
+    * without re-measuring both scales. */
   private[operators] def encodedBatch(s: SparkSession, dir: String): DataFrame =
-    encodeChunks(
-      TextAnalysis.queries("c3_chunk_corpus")(s, dir)
-        .filter(pmod(col("doc_id"), lit(s15Mod)) === lit(s15Res)))
+    encodeChunks(TextAnalysis.c3Chunks(s, dir)
+      .filter(pmod(col("doc_id"), lit(s15Mod)) === lit(s15Res)))
 
   /** The refreshed index: fold the arriving batch's chunks into the
     * persisted base index. LSH buckets don't drift with the corpus the

@@ -38,30 +38,35 @@ private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
     idxStore(s, dir, "s21")
 
   /** THE store write discipline (one definition for every lifecycle
-    * gate): repartition on the partition columns routes each value's
-    * rows to a single task, so every write lands exactly one file per
-    * touched partition dir — the fold cadence prof9 counts and s21
-    * compacts. The in-partition (doc_id, chunk_idx) sort makes each
-    * file's ROW ORDER content-deterministic (shuffle fetch order is
-    * not), so for a fixed Spark/parquet/codec version the written
-    * BYTES reproduce run-to-run — the property prof9's size readout
-    * gates on (and a generally good one: stable encodings, stable
-    * min/max stats). `append` = the fold writes; false = the base
-    * snapshot. `overwriteDir` = the STREAMING fold writes (d17's tick,
-    * z3's arrival fold), where `store` IS the write's own batch=<seq>
-    * namespace: a plain whole-directory overwrite, so an
-    * at-least-once foreachBatch retry REWRITES its own subdir instead
-    * of appending duplicates (the idempotent batch-subdir rule). This
-    * replaced the round-18 dynamic-partition-overwrite form (r21
-    * measure): the fold only ever targets a FRESH batch dir, so
-    * dynamic overwrite's machinery — task output staged under the
-    * whole table root, then a driver-side delete-and-move per touched
-    * partition — bought nothing over writing the batch dir directly,
-    * and cost ~0.1-0.3 s of driver FS work per fold write (×2 sides
-    * ×2 micro-batches ×1-3 ticks in d17/d18/d19). Layout and bytes
-    * are identical: same batch=<seq>/<col>=v dirs (the batch value now
-    * carried by the target path), same one-file-per-touched-partition
-    * routing, same in-partition sort. */
+    * gate). Routing: [[graft.sources.Sinks.byPartition]] hashes the
+    * rows on the partition columns into the session's
+    * `spark.sql.shuffle.partitions` tasks (the core count), so each
+    * value's rows reach a single task and every write lands exactly one
+    * file per touched partition dir — the fold cadence prof9 counts and
+    * s21 compacts — while the dirs spread over every core. AQE
+    * coalescing is wrong for these writes, which is why the count is
+    * explicit: AQE merges shuffle partitions until their BYTES fill a
+    * target, but a small write's cost is per FILE (each writer task
+    * opens, encodes and commits one parquet file per dir it touches,
+    * ~2 ms of CPU each), and one file per bucket forbids splitting a
+    * bucket across tasks, so the coalesced write ran every bucket of a
+    * store in one task, in series. The in-partition (doc_id,
+    * chunk_idx) sort makes each file's ROW ORDER content-deterministic
+    * (shuffle fetch order is not), so for a fixed Spark/parquet/codec
+    * version the written BYTES reproduce run-to-run and whichever task
+    * writes a bucket — the property prof9's size readout gates on (and
+    * a generally good one: stable encodings, stable min/max stats).
+    * `append` = the fold writes; false = the base snapshot.
+    * `overwriteDir` = the STREAMING fold writes (d17's tick, z3's
+    * arrival fold), where `store` IS the write's own batch=<seq>
+    * namespace: a plain whole-directory overwrite, so an at-least-once
+    * foreachBatch retry REWRITES its own subdir instead of appending
+    * duplicates (the idempotent batch-subdir rule). The fold only ever
+    * targets a FRESH batch dir, so a dynamic partition overwrite —
+    * task output staged under the whole table root, then a driver-side
+    * delete-and-move per touched partition — would buy nothing over
+    * writing the batch dir directly (it cost ~0.1-0.3 s of driver FS
+    * work per fold write when measured). */
   private[operators] def writeStore(df: DataFrame, store: String,
                          partCols: Seq[String],
                          append: Boolean = false,
@@ -74,7 +79,7 @@ private[operators] trait SimilarityStoreLifecycle { this: Similarity.type =>
     // (ZOrder's event layout) ride the same discipline with their own
     // in-partition row key instead of forking the writer
     val sortCols = (partCols ++ rowKeyCols).map(col)
-    val w = df.repartition(partCols.map(col): _*)
+    val w = graft.sources.Sinks.byPartition(df, partCols)
       .sortWithinPartitions(sortCols: _*).write
       // pin the writer knobs the prof9 byte goldens depend on (round-16
       // advice): codec and row-group size are otherwise AMBIENT defaults

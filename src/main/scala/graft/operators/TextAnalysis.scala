@@ -749,31 +749,41 @@ object TextAnalysis {
   /** Quality floor of the curation pipeline (c1). */
   private[operators] val c1QualityFloor = 0.5
 
+  /** The CURATED CORPUS, the silver frame of the c1 curation rule:
+    * exact-dedup keepers only (d1's min-doc_id rule, a left-semi join)
+    * ∩ language filter (t3, keep 'en') ∩ quality floor (t2 score ≥
+    * 0.5), annotated with the BPE-ish token count (t1) that feeds the
+    * packing layout (t8). The three annotation columns come from one
+    * projection of the [[annotations]] frame. Consumers: the c1 gate,
+    * c3's chunks and through them the retrieval, postings and embedder
+    * artifacts, the s15 arriving batch (prof9, s15, s21, s24, s27) and
+    * every d16–d19 fold.
+    *
+    * Why an artifact: the keeper is `min(doc_id)` over a
+    * `groupBy(content_hash)` of the WHOLE documents table, so no doc_id
+    * restriction passes below it, and a per-call chain paid that
+    * corpus-wide aggregate in every store build and every micro-batch
+    * fold, whatever the batch's size. Rows are unsorted. */
+  private[graft] def curated(s: SparkSession, dir: String): DataFrame =
+    Registry.frame("curated", s, dir) {
+      val keepers = Dedup.d1Exact(s, dir).select(col("keeper").as("doc_id"))
+      val ann = annotations(s, dir).select(col("doc_id"),
+        col("quality_score"), col("lang_pred"), col("n_regex_tokens"))
+      t(s, dir, "documents").select(col("doc_id"), col("source"))
+        .join(keepers, Seq("doc_id"), "left_semi")
+        .join(ann, Seq("doc_id"))
+        .filter(col("lang_pred") === "en" &&
+          col("quality_score") >= c1QualityFloor)
+        .select(col("doc_id"), col("source"), col("lang_pred"),
+          col("quality_score"), col("n_regex_tokens"))
+    }
+
   /** C1: the END-TO-END CURATION pipeline — what the whole battery is
-    * for: exact-dedup keepers only (d1's min-doc_id rule) ∩ language
-    * filter (t3, keep 'en') ∩ quality floor (t2 score ≥ 0.5), annotated
-    * with the BPE-ish token count (t1) that feeds the packing layout
-    * (t8). Pure composition of already-gated operators — the oracle
-    * composes their SQL twins the same way, so the gate checks operator
-    * INTEROP, not just each stage alone. All joins are on doc_id
-    * (co-partitioned after the first shuffle); d1's keeper set arrives
-    * as a left-semi join. */
-  val c1Curation: Q = (s, dir) => {
-    val keepers = Dedup.d1Exact(s, dir).select(col("keeper").as("doc_id"))
-    val quality = t2Quality(s, dir).select(col("doc_id"), col("quality_score"))
-    val lang = t3LangId(s, dir).select(col("doc_id"), col("lang_pred"))
-    val tokens = t1Tokens(s, dir).select(col("doc_id"), col("n_regex_tokens"))
-    t(s, dir, "documents").select(col("doc_id"), col("source"))
-      .join(keepers, Seq("doc_id"), "left_semi")
-      .join(quality, Seq("doc_id"))
-      .join(lang, Seq("doc_id"))
-      .join(tokens, Seq("doc_id"))
-      .filter(col("lang_pred") === "en" &&
-        col("quality_score") >= c1QualityFloor)
-      .select(col("doc_id"), col("source"), col("lang_pred"),
-        col("quality_score"), col("n_regex_tokens"))
-      .orderBy("doc_id")
-  }
+    * for: the [[curated]] corpus in doc_id order. Pure composition of
+    * already-gated operators — the oracle composes their SQL twins the
+    * same way (d1's keepers, t2's score, t3's verdict, t1's count), so
+    * the gate checks operator INTEROP, not just each stage alone. */
+  val c1Curation: Q = (s, dir) => curated(s, dir).orderBy("doc_id")
 
   /** Hot-span ceiling of the full curation pipeline (c2). */
   private[operators] val c2HotCeiling = 0.5
@@ -818,19 +828,24 @@ object TextAnalysis {
     * t12's overlapping chunking: only curated documents are chunked,
     * each chunk annotated with its document's source and quality score
     * (the frame an embedding/indexing job consumes). Doc-keyed
-    * equi-join of two gated stages — both sides shuffle on doc_id, so
-    * the join is co-partitioned; at corpus scale the c1 survivor set
-    * is the small side and AQE broadcasts it. The oracle composes the
-    * two stage oracles the same way, gating the INTEROP (chunks exist
-    * exactly for c1 survivors, annotations carried exactly). */
-  val c3ChunkCorpus: Q = (s, dir) => {
-    val kept = c1Curation(s, dir)
+    * equi-join of t12's chunks with the persisted [[curated]] frame,
+    * the small side. The oracle composes the two stage oracles the same
+    * way, gating the INTEROP (chunks exist exactly for c1 survivors,
+    * annotations carried exactly). The gate and every registry build
+    * read this sorted frame; a per-call consumer that imposes its own
+    * layout reads [[c3Chunks]]. */
+  val c3ChunkCorpus: Q = (s, dir) =>
+    c3Chunks(s, dir).orderBy("doc_id", "chunk_idx")
+
+  /** c3's rows without the presentation sort. A doc_id restriction
+    * pushes down to t12's documents scan. */
+  private[operators] def c3Chunks(s: SparkSession, dir: String): DataFrame = {
+    val kept = curated(s, dir)
       .select(col("doc_id"), col("source"), col("quality_score"))
     t12Chunk(s, dir).join(kept, Seq("doc_id"))
       .select(col("doc_id"), col("chunk_idx"), col("n_chunks"),
         col("start_tok"), col("n_chunk_tokens"), col("chunk_text"),
         col("source"), col("quality_score"))
-      .orderBy("doc_id", "chunk_idx")
   }
 
   /** U15: DEDUP-CLUSTER-AWARE SPLIT — the leakage guard a training

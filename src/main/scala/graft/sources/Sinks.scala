@@ -103,9 +103,9 @@ object Sinks {
     * `DELETE` analogs): `df` lands in `target`, a path inside a store
     * version that [[graft.core.StoreFs.buildVersion]] has not published
     * yet, so readers see the old version or the new one and nothing is
-    * ever swapped. `repartition` on `partCols` routes every row of a
-    * partition value to one task, and `partitionBy` then writes one
-    * file per partition dir: a store fragmented by appends comes out at
+    * ever swapped. [[byPartition]] routes every row of a partition
+    * value to one task, and `partitionBy` then writes one file per
+    * partition dir: a store fragmented by appends comes out at
     * one file per dir with its directory layout, and a frame under a
     * new keyspace comes out under that keyspace. An output with no data
     * files is refused — a schema-less dir (`_SUCCESS` only) would brick
@@ -120,7 +120,7 @@ object Sinks {
     // phase label: the rewrite is the dominant job of its build
     graft.core.Jobs.labeled(spark,
       s"$what stage ${new Path(target).getName}") {
-      df.repartition(partCols.map(col): _*)
+      byPartition(df, partCols)
         .write.partitionBy(partCols: _*).parquet(target)
     }
     val fs = new Path(target)
@@ -140,6 +140,17 @@ object Sinks {
           s"at $target — refusing; drop the store explicitly instead")
     }
   }
+
+  /** THE row routing of every partitioned store write ([[writePartitioned]]
+    * and `Similarity.writeStore`, whose scaladoc gives the reasons): a
+    * hash repartition on `partCols` into the session's
+    * `spark.sql.shuffle.partitions` tasks. The explicit count keeps AQE
+    * from coalescing the write into one task. */
+  private[graft] def byPartition(df: DataFrame,
+                                 partCols: Seq[String]): DataFrame =
+    df.repartition(
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      partCols.map(col): _*)
 
   /** THE tombstone anti-join — one definition for the read-time
     * serve-through path (Similarity.serveThroughTombstones) and the

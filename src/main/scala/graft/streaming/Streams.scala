@@ -83,7 +83,10 @@ object Streams {
     * key would otherwise silently share whichever layout was written
     * first (round-11 advice; e5/e9/e10 stage the natural layout, e6
     * stages coalesce(1), e8 stages the ordered-replay range layout —
-    * previously distinguished only by convention). Returns the dir
+    * previously distinguished only by convention). A fresh staging's
+    * part files get strictly increasing mtimes in name order
+    * ([[stampNameOrder]]), so a `maxFilesPerTrigger(1)` replay reads
+    * them as the same micro-batches in every JVM. Returns the dir
     * path. */
   def stageForReplay(df: DataFrame, key: String, shape: String): String = {
     val fullKey = s"$key-$shape"
@@ -91,10 +94,33 @@ object Streams {
     val dir = graft.core.StoreFs.base(s) +
       s"/graft-stream-$fullKey-p${ProcessHandle.current.pid}"
     stagingLocks.computeIfAbsent(fullKey, _ => new Object).synchronized {
-      if (!graft.core.StoreFs.exists(s, s"$dir/_SUCCESS"))
+      if (!graft.core.StoreFs.exists(s, s"$dir/_SUCCESS")) {
         df.write.mode("overwrite").parquet(dir)
+        stampNameOrder(s, dir)
+      }
     }
     dir
+  }
+
+  /** Gives the part files of a staged dir strictly increasing mtimes
+    * in name order. FileStreamSource replays files in mtime order, and
+    * the files of one write job share their mtimes, so without the
+    * stamp the tie breaks in listing order and which file becomes
+    * micro-batch 0 changes from JVM to JVM. Part-NNNNN name order is
+    * partition order, which for a range-partitioned staging is range
+    * order (partition 0 = lowest range). Runs once per staging, in
+    * the staging lock, before any reader lists the dir. */
+  private def stampNameOrder(s: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(p)
+      .filter(_.getPath.getName.startsWith("part-")).sortBy(_.getPath.getName)
+    if (parts.nonEmpty) {
+      val base = parts.map(_.getModificationTime).max
+      parts.zipWithIndex.foreach { case (f, i) =>
+        fs.setTimes(f.getPath, base + (i + 1) * 1000L, -1)
+      }
+    }
   }
 
   /** Stage `df` as `nFiles` EVENT-TIME-ORDERED parquet files (range
@@ -115,27 +141,13 @@ object Streams {
     * (batch i+1's min event time ≥ batch i's max, while every
     * watermark lags ≥ the join's look-back range — nothing is ever
     * dropped, so the AvailableNow output still converges to the batch
-    * join the oracle computes). Idempotent: a re-stamp over an
-    * already-staged dir recomputes the same name-ordered sequence. */
+    * join the oracle computes). [[stageForReplay]] stamps every fresh
+    * staging that way. */
   def stageForOrderedReplay(df: DataFrame, key: String, tsCol: String,
-                            nFiles: Int): String = {
-    val dir = stageForReplay(
+                            nFiles: Int): String =
+    stageForReplay(
       df.repartitionByRange(nFiles, col(tsCol)).sortWithinPartitions(tsCol),
       key, s"rts$nFiles")
-    val s = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // part-NNNNN name order IS range order (partition 0 = lowest range)
-    val parts = fs.listStatus(p).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    if (parts.nonEmpty) {
-      val base = parts.map(fs.getFileStatus(_).getModificationTime).max
-      parts.zipWithIndex.foreach { case (f, i) =>
-        fs.setTimes(f, base + (i + 1) * 1000L, -1)
-      }
-    }
-    dir
-  }
 
   /** Hourly tumbling-window counts per event_type with a watermark —
     * streaming dual of queries.Events.e2HourlyAgg. `ts` is event-time

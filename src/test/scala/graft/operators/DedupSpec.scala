@@ -326,10 +326,13 @@ class DedupSpec extends SparkSpec {
       graft.SparkEntry.queries("d12_stream_ingest_gate")(spark, dir)
         .collect())
     val pid = ProcessHandle.current.pid
+    // only this table's roots: a suite that ran d12 on another dir
+    // earlier in this JVM left a root under its own fingerprint
+    val fp = graft.core.Tables.sourceFingerprint(s"$dir/documents.parquet")
     val roots = new java.io.File(localPath(graft.core.StoreFs.base(spark)))
       .listFiles().filter { f =>
         val n = f.getName
-        n.startsWith("graft-d12_stream_ingest_gate-sink-") &&
+        n.startsWith(s"graft-d12_stream_ingest_gate-sink-docs-$fp-") &&
           (n.endsWith(s"-p$pid") || n.contains(s"-p$pid-c"))
       }
     assert(roots.length === 1,

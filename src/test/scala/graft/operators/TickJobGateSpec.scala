@@ -3,15 +3,16 @@ package graft.operators
 import graft.SparkSpec
 import graft.core.{StoreFs, Telemetry}
 
-/** Work-counter gate for the ingest-tick family: the warm call of each
-  * of d12, d13 and d16–d19 runs no more Spark jobs and compiles no more
-  * generated classes than the recorded ceilings. Job counts do not
-  * depend on the host's speed or load, so a change that adds a job to
-  * the arrival replay, the fold or the readback fails here even when
-  * its wall-time cost is inside the noise of a timed run.
+/** Work-counter gate for the ingest-tick family and the store builds:
+  * the warm call of each of d12, d13, d16–d19, prof9 and s21 runs no
+  * more Spark jobs and compiles no more generated classes than the
+  * recorded ceilings. Job counts do not depend on the host's speed or
+  * load, so a change that adds a job to the arrival replay, the fold,
+  * the readback or a store write fails here even when its wall-time
+  * cost is inside the noise of a timed run.
   *
-  * The ceilings are the counts of commit c599b99 on the committed
-  * sf0.001 tables (`local[4]`), identical over two runs; every counter
+  * The ceilings are the counts measured on the committed sf0.001
+  * tables (`local[4]`), identical over repeated runs; every counter
   * listed was stable. A change that lowers a count lowers its ceiling. */
 class TickJobGateSpec extends SparkSpec {
 
@@ -22,10 +23,12 @@ class TickJobGateSpec extends SparkSpec {
   private val ceilings = Seq(
     "d12_stream_ingest_gate" -> (18, 0L),
     "d13_stream_cluster_tag" -> (28, 0L),
-    "d16_ingest_tick" -> (63, 0L),
-    "d17_tick_store" -> (71, 0L),
-    "d18_tick_maintain" -> (81, 0L),
-    "d19_multi_tick" -> (111, 0L))
+    "d16_ingest_tick" -> (53, 0L),
+    "d17_tick_store" -> (61, 0L),
+    "d18_tick_maintain" -> (71, 0L),
+    "d19_multi_tick" -> (81, 0L),
+    "prof9_store_health" -> (16, 0L),
+    "s21_index_compaction" -> (18, 0L))
 
   private def run(op: String): Long =
     graft.SparkEntry.queries(op)(spark, dir).queryExecution.toRdd.count()
@@ -43,8 +46,8 @@ class TickJobGateSpec extends SparkSpec {
         op -> (rec.jobs.size, rec.compiles)
       }
     } finally {
-      // drop the lifecycle roots made here: they are keyed by source
-      // dir, and DedupSpec counts this JVM's d12 sink roots
+      // drop the lifecycle roots made here, so the suite leaves no
+      // store behind for this JVM's later suites
       roots.filterNot(before)
         .foreach(n => StoreFs.deleteQuietly(spark, s"$base/$n"))
     }

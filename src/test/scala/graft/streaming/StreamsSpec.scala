@@ -183,4 +183,24 @@ class StreamsSpec extends SparkSpec {
     runStream(store, s"$base/ckpt2")
     assert(read(store) === expected)
   }
+
+  test("stageForReplay stamps strictly increasing mtimes in part-file " +
+    "name order, once, at staging time") {
+    val key = s"mtime-spec-${java.util.UUID.randomUUID().toString.take(8)}"
+    val shaped = spark.range(0, 300).toDF("doc_id")
+      .repartitionByRange(3, col("doc_id"))
+    val dir = Streams.stageForReplay(shaped, key, "r3")
+    try {
+      def mtimes = new java.io.File(localPath(dir)).listFiles()
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        .map(_.lastModified).toSeq
+      val first = mtimes
+      assert(first.length === 3, s"expected 3 staged files: $first")
+      assert(first.zip(first.tail).forall { case (a, b) => a < b },
+        s"mtimes not strictly increasing in name order: $first")
+      // a second call finds the staging complete and leaves it as it is
+      assert(Streams.stageForReplay(shaped, key, "r3") === dir)
+      assert(mtimes === first)
+    } finally graft.core.StoreFs.deleteQuietly(spark, dir)
+  }
 }
